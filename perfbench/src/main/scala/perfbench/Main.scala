@@ -17,23 +17,22 @@ import graft.engine.{CacheRegistry, ConfigBoot, HttpGateway, Namespaces, Router}
 /** The benchmark's in-process half. `run.py` stages the seeded inputs,
   * starts this main, and checks what it wrote:
   *
-  *   perfbench.Main <workload> <data dir> <work dir> <seconds> <trace 0|1>
-  *       <cpus> [<config.json> <requests.json>]
+  *   perfbench.Main [setup] <workload> <data dir> <work dir> <seconds>
+  *       <trace 0|1> <cores> [<config.json> <requests.json>]
   *
   * It drives the workload through the program's public entry points
   * and writes `<work dir>/result.json` (timings, responses, failures)
   * and, when traced, `<work dir>/trace.json` (spans and listener
-  * events).
+  * events). With `setup` first it only sets the workload up in this
+  * fresh JVM, records how long that took, and stops. `<cores>` is
+  * Spark's task slots and the gateway's client threads.
   */
 object Main {
   private val mapper = new ObjectMapper
 
   final case class Opts(workload: String, data: String, work: String,
-      seconds: Double, trace: Boolean, cpus: Int, config: String,
+      seconds: Double, trace: Boolean, cores: Int, config: String,
       requests: String)
-
-  /** How many times set-up is repeated for the reported median. */
-  val SetupRepeats = 5
 
   // Pipeline order. Left out to keep a run inside its time budget:
   // e_pipeline_warc (the WARC head of e_pipeline_full),
@@ -48,13 +47,43 @@ object Main {
     "e_stream_session_replay")
 
   /** Seconds of warm work one warm pass stands for: a run makes
-    * `seconds / PassSeconds` warm passes, at least one.
+    * `seconds / PassSeconds` warm passes, at least one (two at the
+    * benchmark's 10 s, so each stage's warm time is a best of two).
     */
-  val PassSeconds = 10.0
+  val PassSeconds = 5.0
 
+  /** Once its results are written, the JVM ends without Spark's orderly
+    * shutdown, which would only add seconds to every run; a failure
+    * ends it with code 1, whatever threads are still alive.
+    */
   def main(args: Array[String]): Unit = {
-    val o = Opts(args(0), args(1), args(2), args(3).toDouble, args(4) == "1",
+    try {
+      if (args(0) == "setup") setupOnly(opts(args.tail)) else run(opts(args))
+    } catch {
+      case e: Throwable =>
+        e.printStackTrace()
+        Runtime.getRuntime.halt(1)
+    }
+    Runtime.getRuntime.halt(0)
+  }
+
+  def opts(args: Array[String]): Opts =
+    Opts(args(0), args(1), args(2), args(3).toDouble, args(4) == "1",
       args(5).toInt, args.lift(6).getOrElse(""), args.lift(7).getOrElse(""))
+
+  /** Set the workload up as a run does and record the set-up time. */
+  def setupOnly(o: Opts): Unit = {
+    o.workload match {
+      case "gateway_lookup" => setUpGateway(o)
+      case "corpus_stream" => session(o)
+      case w => sys.error(s"unknown workload: $w")
+    }
+    val result = new JMap[String, Any]()
+    result.put("setup_s", Jvm.uptimeS)
+    write(s"${o.work}/result.json", result)
+  }
+
+  def run(o: Opts): Unit = {
     val tr = new Tracer
     val result = new JMap[String, Any]()
     result.put("workload", o.workload)
@@ -80,18 +109,25 @@ object Main {
 
   def readJson(path: String): JsonNode = mapper.readTree(Paths.get(path).toFile)
 
-  def session(o: Opts, n: Int): SparkSession = {
+  def session(o: Opts): SparkSession = {
     val s = SparkSession.builder()
-      .master(s"local[${o.cpus}]")
-      .config("spark.sql.shuffle.partitions", o.cpus.toString)
+      .master(s"local[${o.cores}]")
+      .config("spark.sql.shuffle.partitions", o.cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", s"${o.work}/warehouse-$n")
+      .config("spark.sql.warehouse.dir", s"${o.work}/warehouse")
       .config("spark.local.dir", s"${o.work}/spark-local")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** The gateway's set-up: session, config boot, HTTP bind. */
+  def setUpGateway(o: Opts): (SparkSession, HttpGateway, Namespaces) = {
+    val spark = session(o)
+    val ns = ConfigBoot.boot(Files.readString(Paths.get(o.config)))
+    (spark, HttpGateway.start(ns, spark, o.data), ns)
   }
 
   /** CacheRegistry's eviction counter is package-private; its accessor
@@ -128,11 +164,13 @@ import Main._
 
 /** `corpus_stream`: the corpus-pipeline stages and the stream replays,
   * each executed in full into a parquet sink. One cold pass in the
-  * fresh process, then `seconds / PassSeconds` warm passes.
+  * fresh process, then `seconds / PassSeconds` warm passes. Every pass
+  * writes its own output directory, so every stage run is checked.
   */
 final class BatchRun(o: Opts, tr: Tracer, result: JMap[String, Any]) {
   private val stages = CorpusStages ++ StreamStages
   private val stageTimes = new JMap[String, Any]()
+  private val passes = new JList[Any]()
 
   private def runStage(spark: SparkSession, name: String, pass: String): Unit =
     tr.span("stage", name) {
@@ -147,70 +185,52 @@ final class BatchRun(o: Opts, tr: Tracer, result: JMap[String, Any]) {
       }
     }
 
-  /** One pass over every stage; returns its (wall, CPU) seconds. Each
-    * stage's wall and CPU seconds are kept under `label` and
-    * `label_cpu`.
+  /** One pass over every stage, its outputs under `out/<dir>`; returns
+    * its seconds. Each stage's seconds are kept under `label`.
     */
-  private def pass(spark: SparkSession, label: String, out: String): (Double, Double) = {
+  private def pass(spark: SparkSession, label: String, dir: String): Double = {
     tr.enter(spark, label)
-    val cpu0 = Jvm.cpuS
+    passes.add(dir)
     val (_, s) = tr.span("pass", label) {
       stages.foreach { n =>
         val t0 = System.nanoTime()
-        val c0 = Jvm.cpuS
-        try runStage(spark, n, out)
-        catch { case e: Throwable => fail(result, s"$n/$out", e) }
-        val st = stageTimes.computeIfAbsent(n, _ => new JMap[String, Any]())
+        try runStage(spark, n, dir)
+        catch { case e: Throwable => fail(result, s"$n/$dir", e) }
+        stageTimes.computeIfAbsent(n, _ => new JMap[String, Any]())
           .asInstanceOf[JMap[String, Any]]
-        def add(k: String, v: Double): Unit =
-          st.computeIfAbsent(k, _ => new JList[Any]()).asInstanceOf[JList[Any]].add(v)
-        add(label, (System.nanoTime() - t0) / 1e9)
-        add(label + "_cpu", Jvm.cpuS - c0)
+          .computeIfAbsent(label, _ => new JList[Any]()).asInstanceOf[JList[Any]]
+          .add((System.nanoTime() - t0) / 1e9)
       }
     }
-    (s, Jvm.cpuS - cpu0)
-  }
-
-  private def setUp(n: Int): (SparkSession, Double) = {
-    val t0 = System.nanoTime()
-    val spark = session(o, n)
-    (spark, (System.nanoTime() - t0) / 1e9)
+    s
   }
 
   def run(): Unit = {
-    val (spark, setup0) = setUp(0)
+    val spark = session(o)
+    result.put("setup_s", Jvm.uptimeS)
     if (o.trace) tr.attach(spark)
     memoSnapshot(tr, "start")
-    val (cold, coldCpu) = pass(spark, "cold", "cold")
+    val cold = pass(spark, "cold", "cold")
     if (o.trace) {
       // the same warm pass untraced, then traced: their ratio is the
       // tracing overhead
       tr.detach()
-      val (_, plain) = pass(spark, "warm_untraced", "warm")
+      val plain = pass(spark, "warm_untraced", "warm_untraced")
       tr.attach(spark)
       Jvm.resetHeapPeak()
       jvmSnapshot(tr, "warm_start")
-      val (_, traced) = pass(spark, "warm", "warm")
+      val traced = pass(spark, "warm", "warm-1")
       jvmSnapshot(tr, "warm_end")
       result.put("trace_overhead_frac", traced / plain - 1.0)
     } else {
       val n = math.max(1, (o.seconds / PassSeconds).toInt)
-      (1 to n).foreach(_ => pass(spark, "warm", "warm"))
+      (1 to n).foreach(i => pass(spark, "warm", s"warm-$i"))
     }
     tr.enter(spark, "end")
     memoSnapshot(tr, "end")
     tr.detach()
-    spark.stop()
-    val setups = new JList[Any]()
-    setups.add(setup0)
-    if (!o.trace) (1 until SetupRepeats).foreach { i =>
-      val (s, secs) = setUp(i)
-      setups.add(secs)
-      s.stop()
-    }
-    result.put("setup_s", setups)
     result.put("cold_s", cold)
-    result.put("cold_cpu_s", coldCpu)
+    result.put("passes", passes)
     result.put("stages", stageTimes)
     result.put("stage_names", list(stages))
     val oracles = new JMap[String, Any]()
@@ -221,8 +241,8 @@ final class BatchRun(o: Opts, tr: Tracer, result: JMap[String, Any]) {
 
 /** `gateway_lookup`: the benchmark's own config served by
   * [[HttpGateway]] over loopback. A serial cold pass (one request per
-  * route kind), then phase A (open loop: seeded arrivals, each request
-  * timed from its due time) and phase B (closed loop: `cpus` clients
+  * route kind) and a closed-loop warm-up, then phase A (open loop: seeded arrivals, each request
+  * timed from its due time) and phase B (closed loop: `cores` clients
   * working through a fixed request list).
   */
 final class GatewayRun(o: Opts, tr: Tracer, result: JMap[String, Any]) {
@@ -230,6 +250,9 @@ final class GatewayRun(o: Opts, tr: Tracer, result: JMap[String, Any]) {
   private val responses = new JList[JMap[String, Any]]()
 
   private def url(base: String, r: JsonNode): String = base + r.get("url").asText
+
+  private def reqList(name: String): Seq[JsonNode] =
+    reqs.get(name).elements.asScala.toIndexedSeq
 
   /** One GET; returns (status, body). */
   private def get(u: String): (Int, String) = {
@@ -268,23 +291,17 @@ final class GatewayRun(o: Opts, tr: Tracer, result: JMap[String, Any]) {
     responses.synchronized(responses.add(m))
   }
 
-  private def setUp(n: Int): (SparkSession, HttpGateway, Namespaces, Double) = {
-    val t0 = System.nanoTime()
-    val spark = session(o, n)
-    val ns = ConfigBoot.boot(Files.readString(Paths.get(o.config)))
-    val gw = HttpGateway.start(ns, spark, o.data)
-    (spark, gw, ns, (System.nanoTime() - t0) / 1e9)
-  }
-
-  /** Phase A: requests sent at their seeded due times by at most `cpus`
-    * client threads; returns the generator's lateness per request (ms).
+  /** Phase A: the requests of `list` sent at their seeded due times,
+    * counted from the first one's, by at most `cores` client threads;
+    * returns the generator's lateness per request (ms).
     */
-  private def openLoop(base: String, phase: String): Seq[Double] = {
-    val pool = Executors.newFixedThreadPool(o.cpus)
+  private def openLoop(base: String, phase: String,
+      list: Seq[JsonNode]): Seq[Double] = {
+    val pool = Executors.newFixedThreadPool(o.cores)
     val lags = new JList[Double]()
-    val t0 = tr.nowMs
+    val t0 = tr.nowMs - list.head.get("due_s").asDouble * 1e3
     try {
-      reqs.get("open").elements.asScala.foreach { r =>
+      list.foreach { r =>
         val due = t0 + r.get("due_s").asDouble * 1e3
         val wait = due - tr.nowMs
         if (wait > 0) Thread.sleep(wait.toLong, ((wait % 1) * 1e6).toInt)
@@ -298,16 +315,16 @@ final class GatewayRun(o: Opts, tr: Tracer, result: JMap[String, Any]) {
     lags.asScala.toSeq
   }
 
-  /** `cpus` clients, each sending its next request as soon as the
-    * previous one answered, until the `list` is done. Returns the
-    * seconds from start to the last answer.
+  /** `cores` clients, each sending its next request as soon as the
+    * previous one answered, until `all` is done. Returns the seconds
+    * from start to the last answer.
     */
-  private def closedLoop(base: String, list: String, phase: String): Double = {
-    val all = reqs.get(list).elements.asScala.toIndexedSeq
+  private def closedLoop(base: String, all: Seq[JsonNode],
+      phase: String): Double = {
     val next = new java.util.concurrent.atomic.AtomicInteger(0)
     val t0 = tr.nowMs
-    val pool = Executors.newFixedThreadPool(o.cpus)
-    (0 until o.cpus).foreach { _ =>
+    val pool = Executors.newFixedThreadPool(o.cores)
+    (0 until o.cores).foreach { _ =>
       pool.submit(new Runnable {
         def run(): Unit = {
           var i = next.getAndIncrement()
@@ -350,58 +367,56 @@ final class GatewayRun(o: Opts, tr: Tracer, result: JMap[String, Any]) {
   }
 
   def run(): Unit = {
-    val (spark, gw, ns, setup0) = setUp(0)
+    val (spark, gw, ns) = setUpGateway(o)
+    result.put("setup_s", Jvm.uptimeS)
     if (o.trace) tr.attach(spark)
     memoSnapshot(tr, "start")
     tr.enter(spark, "cold")
-    val coldCpu0 = Jvm.cpuS
-    val (_, cold) = tr.span("pass", "cold") {
+    val (_, first) = tr.span("pass", "cold") {
       reqs.get("cold").elements.asScala.foreach(r =>
         send(gw.baseUrl, r, "cold", tr.nowMs))
     }
-    result.put("cold_cpu_s", Jvm.cpuS - coldCpu0)
-    // untimed: the cold pass leaves the JIT far from steady, so each
-    // client sends a few more requests before phase A
+    // the serial pass leaves the JIT far from steady, so the clients
+    // send a few more rounds before phase A; cold_s is both, the time
+    // a fresh process takes to serve its first requests, which spreads
+    // one cold sample over more than a few seconds of the host
     tr.enter(spark, "warmup")
-    closedLoop(gw.baseUrl, "warmup", "warmup")
+    val cold = first + closedLoop(gw.baseUrl, reqList("warmup"), "warmup")
+    val open = reqList("open")
     val lags =
       if (o.trace) {
         tr.detach()
         tr.enter(spark, "open_untraced")
-        openLoop(gw.baseUrl, "open_untraced")
+        openLoop(gw.baseUrl, "open_untraced", open)
         tr.attach(spark)
         Jvm.resetHeapPeak()
         tr.enter(spark, "open")
         jvmSnapshot(tr, "open_start")
-        val l = openLoop(gw.baseUrl, "open")
+        val l = openLoop(gw.baseUrl, "open", open)
         jvmSnapshot(tr, "open_end")
         replay(spark, ns, gw.baseUrl)
         l
       } else {
-        tr.enter(spark, "open")
-        val c0 = Jvm.cpuS
-        val l = openLoop(gw.baseUrl, "open")
-        result.put("open_cpu_s", Jvm.cpuS - c0)
-        tr.enter(spark, "closed")
-        val c1 = Jvm.cpuS
-        result.put("closed_s", closedLoop(gw.baseUrl, "closed", "closed"))
-        result.put("closed_cpu_s", Jvm.cpuS - c1)
+        // phases A and B alternate in halves, so each samples the
+        // whole steady stretch of the run and a slow spell of the host
+        // shifts both a little rather than one of them entirely
+        val closed = reqList("closed")
+        val halves = open.grouped((open.size + 1) / 2).toSeq
+          .zip(closed.grouped((closed.size + 1) / 2).toSeq)
+        var closedS = 0.0
+        val l = halves.flatMap { case (a, b) =>
+          tr.enter(spark, "open")
+          val lag = openLoop(gw.baseUrl, "open", a)
+          tr.enter(spark, "closed")
+          closedS += closedLoop(gw.baseUrl, b, "closed")
+          lag
+        }
+        result.put("closed_s", closedS)
         l
       }
     tr.enter(spark, "end")
     memoSnapshot(tr, "end")
     tr.detach()
-    gw.stop()
-    spark.stop()
-    val setups = new JList[Any]()
-    setups.add(setup0)
-    if (!o.trace) (1 until SetupRepeats).foreach { i =>
-      val (s, g, _, secs) = setUp(i)
-      setups.add(secs)
-      g.stop()
-      s.stop()
-    }
-    result.put("setup_s", setups)
     result.put("cold_s", cold)
     result.put("gen_lag_ms", list(lags))
     result.put("responses", responses)

@@ -240,13 +240,10 @@ object Jvm {
     .filter(_.getType == java.lang.management.MemoryType.HEAP)
     .map(_.getPeakUsage.getUsed).sum / 1048576.0
 
-  private val os = ManagementFactory.getOperatingSystemMXBean
-    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-
-  /** CPU time of every thread of this process so far, in seconds. Time
-    * a hypervisor gives to other guests is not in it.
+  /** Seconds since this JVM started: JVM boot and class loading
+    * included.
     */
-  def cpuS: Double = os.getProcessCpuTime / 1e9
+  def uptimeS: Double = ManagementFactory.getRuntimeMXBean.getUptime / 1e3
 
   /** Peak resident set of this process (Linux VmHWM), in MB. */
   def peakRssMb: Double = {

@@ -65,7 +65,7 @@ class SelfTimeTest(unittest.TestCase):
 
 class RequestsTest(unittest.TestCase):
     def gen(self, seed):
-        return lib.gateway_requests(seed, 4, 1500, 15000)
+        return lib.gateway_requests(seed, 1500, 15000)
 
     def test_same_seed_same_requests(self):
         self.assertEqual(self.gen(5), self.gen(5))
@@ -78,11 +78,21 @@ class RequestsTest(unittest.TestCase):
         due = [x["due_s"] for x in r["open"]]
         self.assertEqual(due[0], 0.0)
         self.assertEqual(due, sorted(due))
-        self.assertEqual(len(due), lib.N_OPEN)
         self.assertEqual([x["kind"] for x in r["cold"]],
-                         [k for k, _ in lib.MIX])
+                         lib.TEMPLATES + lib.EXTRAS)
         ids = [x["id"] for rs in r.values() for x in rs]
         self.assertEqual(len(ids), len(set(ids)))
+
+    def test_mix_rule(self):
+        # each template route once per round, one catalog hit and one
+        # unknown query per list, whatever the seed
+        for seed in (1, 2):
+            kinds = [x["kind"] for x in self.gen(seed)["open"]]
+            for k in lib.TEMPLATES:
+                self.assertEqual(kinds.count(k), lib.OPEN_ROUNDS)
+            for k in lib.EXTRAS:
+                self.assertEqual(kinds.count(k), 1)
+            self.assertEqual(len(kinds), 5 * lib.OPEN_ROUNDS + 2)
 
     def test_template_urls_carry_args_and_vars(self):
         rng = lib.np.random.default_rng(1)
@@ -105,6 +115,54 @@ class StagingTest(unittest.TestCase):
             self.assertTrue(one.equals(again))
             self.assertFalse(one.equals(base))
             self.assertTrue(one.sort_by("c_custkey").equals(base.sort_by("c_custkey")))
+
+
+class OracleCacheTest(unittest.TestCase):
+    def test_key_follows_fixture_bytes(self):
+        import duckdb
+        con = duckdb.connect()
+        with tempfile.TemporaryDirectory() as cache:
+            one = lib.oracle_answer(con, "SELECT 1 AS x", cache, "fixture-a")
+            # a stale answer under the same SQL must not serve another
+            # fixture
+            for f in os.listdir(cache):
+                os.remove(os.path.join(cache, f))
+            lib.oracle_answer(con, "SELECT 2 AS x", cache, "fixture-a")
+            other = lib.oracle_answer(con, "SELECT 2 AS x", cache, "fixture-b")
+            self.assertEqual(one.column("x").to_pylist(), [1])
+            self.assertEqual(other.column("x").to_pylist(), [2])
+            self.assertEqual(len(os.listdir(cache)), 2)
+
+    def test_fixture_id_reads_bytes(self):
+        src = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+        with tempfile.TemporaryDirectory() as d:
+            lib.stage_inputs(src, d, 3)
+            self.assertNotEqual(lib.fixture_id(src), lib.fixture_id(d))
+            self.assertEqual(lib.fixture_id(src), lib.fixture_id(src))
+
+
+class CheckStagesTest(unittest.TestCase):
+    def test_every_pass_is_checked(self):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        src = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
+        passes = ["cold", "warm-1", "warm-2"]
+        outs = {("with_oracle", "cold"): 1, ("with_oracle", "warm-1"): 1,
+                ("with_oracle", "warm-2"): 2,
+                ("no_oracle", "cold"): 5, ("no_oracle", "warm-1"): 6}
+        with tempfile.TemporaryDirectory() as out, \
+                tempfile.TemporaryDirectory() as cache:
+            for (stage, p), x in outs.items():
+                os.makedirs(os.path.join(out, p, stage))
+                pq.write_table(pa.table({"x": [x]}),
+                               os.path.join(out, p, stage, "part.parquet"))
+            bad = lib.check_stages(src, out, {"with_oracle": "SELECT 1 AS x"},
+                                   ["with_oracle", "no_oracle"], passes, cache)
+        self.assertEqual(sorted(bad), [("no_oracle", "warm-1"),
+                                       ("no_oracle", "warm-2"),
+                                       ("with_oracle", "warm-2")])
+        self.assertEqual(bad[("no_oracle", "warm-2")], "no output")
+        self.assertIn("differs from cold", bad[("no_oracle", "warm-1")])
 
 
 class CompareTest(unittest.TestCase):

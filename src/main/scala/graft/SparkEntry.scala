@@ -77,8 +77,6 @@ object SparkEntry {
   // within an application, so memoize the counted rows per (app, dir):
   // bench's repeated passes and r_catalog's schema walk pay the 20
   // compilations once (the dedupCc/publishRoot discipline).
-  private val planAuditCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(String, Int, Int, Int, Int, Int)]]()
 
   // The pagerank walks persist their edge/degree/node frames; Spark's
   // CacheManager substitutes a materialized persist into ANY later
@@ -92,8 +90,7 @@ object SparkEntry {
 
   private def planAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    planAuditCache.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}#$dir", _ =>
+    graft.engine.CacheRegistry.memo("plan.audit", dir)(
         planAuditTargets.map { name =>
           if (preMaterialize(name))
             baseQueries(name)(spark, dir)
@@ -101,7 +98,7 @@ object SparkEntry {
           val r = graft.engine.PlanAudit.audit(baseQueries(name)(spark, dir))
           (name, r.shuffles, r.broadcasts, r.windows, r.scans.size,
             r.partitionPrunedScans)
-        })
+        })(_ => ())
       .toDF("query_name", "n_shuffles", "n_broadcasts", "n_windows", "n_scans",
         "n_pruned")
       .orderBy("query_name")

@@ -1,69 +1,63 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-lifetime eviction registry for the per-(app, dataset) memo
-  * caches — the marathon-session memory discipline.
+/** The engine's one memo mechanism: a session-lifetime LRU of
+  * build-once artifacts — the marathon-session memory discipline.
   *
-  * The operators memoize expensive build artifacts (staged feature
-  * frames, the CC label table, the IVF assignment, BPE merge output)
-  * per (application, dataset) so repeated invocations — bench warm
-  * passes, r_catalog's schema walk, composed pipelines — pay each
-  * build once. That is the right production shape, but an UNBOUNDED
-  * memo is a session-lifecycle scale-killer: the r14 768 MB spill
-  * rehearsal measured `e_dedup_simhash_md5` dying with
-  * UNABLE_TO_ACQUIRE_MEMORY after 243 prior queries' pinned blocks
-  * had accumulated, while the same query passed solo at the same cap.
-  * A 100 TB deployment is exactly such a marathon.
+  * Operators memoize expensive builds (staged feature frames, the CC
+  * label table, the IVF assignment, BPE merges, on-disk indexes and
+  * publish roots, trained weights, the plan audit) so bench warm
+  * passes, r_catalog's schema walk and composed pipelines pay each
+  * build once. An UNBOUNDED memo is a scale-killer: the r14 768 MB
+  * spill rehearsal saw `e_dedup_simhash_md5` die with
+  * UNABLE_TO_ACQUIRE_MEMORY after 243 prior queries' pinned blocks had
+  * accumulated, while it passed solo at the same cap. So every memo in
+  * `src/main` routes through here, and the registry owns the KEYING
+  * RULE: site name, Spark application id, then every build parameter
+  * the caller passes (dataset dir, nlist, buckets, plan hash, …).
   *
-  * So every storage-holding memo routes through here instead of a
-  * private ConcurrentHashMap. The registry is an LRU keyed on the
-  * (site, key) pairs the callers already use:
-  *
-  *  - `memo(site, key)(build)(free)` returns the cached value or
+  *  - `memo(site, params*)(build)(free)` returns the cached value or
   *    builds (and registers) it. Each hit refreshes recency.
-  *  - Eviction accounting is BYTES-FIRST (r16): each entry records the
-  *    persistent-RDD ids its build pinned (the before/after delta of
-  *    `sc.getPersistentRDDs` around the build — uniform across
-  *    persist- and checkpoint-backed families), and the entry's live
-  *    footprint is read from `sc.getRDDStorageInfo` (memSize +
-  *    diskSize) at each eviction check, so unpersisted-behind-our-back
-  *    or spilled-to-disk state is accounted as it actually is. LRU
-  *    victims are evicted while the total exceeds `maxResidentBytes`
-  *    (`-Dgraft.cache.maxResidentBytes`, default maxMemory/4 — on the
-  *    512 MB spill-rehearsal heap that is ~128 MB, on a production
-  *    driver it is large) OR while the entry COUNT exceeds
-  *    `maxResident` (`-Dgraft.cache.maxResident`, default 16 — the
-  *    fallback for driver-side values that pin no Spark storage).
-  *    Eviction runs the entry's `free` thunk (unpersist /
-  *    checkpoint-RDD release) and drops the entry, so the next request
-  *    REBUILDS it — to the identical answer, because every build here
-  *    is deterministic by the engine-wide oracle contract
-  *    (CacheRegistrySpec pins this).
-  *  - `evictAll()` is the explicit phase boundary a long pipeline
-  *    calls between stages (and specs call between scenarios).
+  *  - Eviction accounting is BYTES-FIRST (r16): an entry records the
+  *    persistent-RDD ids its build pinned (the `sc.getPersistentRDDs`
+  *    delta around the build, minus ids another resident entry already
+  *    recorded — a nested build such as sim.split → sim.ivf is charged
+  *    once) and its live footprint is read from `sc.getRDDStorageInfo`
+  *    (memSize + diskSize) at each check. LRU victims are evicted while
+  *    the total exceeds `maxResidentBytes` (`-Dgraft.cache.maxResidentBytes`,
+  *    default maxMemory/4) — skipping byte-free entries, whose eviction
+  *    would free nothing — OR while the entry COUNT exceeds
+  *    `maxResident` (`-Dgraft.cache.maxResident`). Eviction runs the
+  *    entry's `free` and drops it, so the next request REBUILDS it to
+  *    the identical answer (every build is deterministic by the oracle
+  *    contract; CacheRegistrySpec pins this per memo site).
+  *  - `evictAll()` is the explicit phase boundary (and a true cold
+  *    reset: nothing memoized survives it).
   *
-  * Consistency under CONCURRENT callers (the HttpGateway 4-thread
-  * pool; r16):
+  * On-disk artifacts (publish roots, persisted indexes, managed tables)
+  * follow one contract: the build is IDEMPOTENT — it writes into a
+  * fresh [[memoDir]] directory and drops the tables and epoch markers
+  * it is about to create ([[graft.sources.Bucketing.dropManaged]]), so
+  * a rebuild never meets a previous build's replay guard; `free`
+  * deletes what the build made; and a caller that reads the artifact
+  * LAZILY holds it inside `scoped`, or another memo call may evict it.
   *
-  *  - Builds run OUTSIDE the registry monitor. `memo` installs a
-  *    per-key latch under the monitor, releases it, runs the build,
-  *    then re-enters to publish; a second caller of the SAME key
-  *    awaits the latch and returns the published value, while callers
-  *    of OTHER keys proceed immediately — no head-of-line blocking of
-  *    unrelated builds behind one long Spark job. A build that throws
-  *    removes its latch so a waiter retries (one of them rebuilds).
-  *    Nested memo calls during a build (the split→IVF, lshCc→staged
-  *    chains) target different keys and compose freely.
-  *  - Values are PINNED while a caller consumes them: `scoped { … }`
-  *    opens a consumption scope on the current thread; every memo hit
-  *    or build inside it increments the entry's pin count, released
-  *    when the scope closes (query end). Eviction skips pinned
-  *    entries, so another thread's builds can never free a frame (or
-  *    a checkpoint block with no lineage to recompute from) out from
-  *    under an in-flight query. The driver mains and the gateway wrap
-  *    each query execution in a scope; an unscoped call (sequential
-  *    spec code) behaves exactly as before.
+  * CONCURRENT callers (the HttpGateway pool; r16):
+  *
+  *  - Builds run OUTSIDE the registry monitor: `memo` installs a
+  *    per-key latch, runs the build, then re-enters to publish. A
+  *    caller of the SAME key awaits the latch; callers of OTHER keys
+  *    proceed (no head-of-line blocking). A build that throws removes
+  *    its latch so a waiter retries. Nested memo calls during a build
+  *    (split→IVF, lshCc→staged, plan audit→audited queries) target
+  *    different keys and compose freely.
+  *  - Values are PINNED while consumed: inside `scoped { … }` every memo
+  *    hit or build pins its entry until the scope closes (query end),
+  *    and eviction skips pinned entries — another thread can never free
+  *    a frame, a checkpoint block or a directory under an in-flight
+  *    query. The driver mains, perfbench and the gateway scope each
+  *    query; an unscoped call (sequential spec code) is unpinned.
   */
 object CacheRegistry {
 
@@ -85,19 +79,19 @@ object CacheRegistry {
   private[graft] val evicted =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Entry-COUNT cap — the fallback bound for driver-side values that
-    * pin no Spark storage (codebook arrays, census maps); the real
-    * memory discipline is [[maxResidentBytes]]. Must sit ABOVE the
-    * suite's distinct live (site, key) count: the full 251-query bench
-    * touches ~20 distinct entries per pass in a fixed cyclic order, and
-    * an LRU whose cap is below the cycle length has a 0% hit rate on a
-    * cyclic scan — measured r16: cap 16 re-paid EVERY memoized build on
-    * every bench pass (e_dedup_incr_minhash 9.55 s/pass vs 0.09 s warm,
-    * ~60 s of the 253 s total). 64 keeps the fallback bounded while the
-    * byte budget governs anything that actually holds storage.
+  /** Entry-COUNT cap — the fallback bound for entries that pin no
+    * Spark storage (driver values, on-disk artifacts); the real memory
+    * discipline is [[maxResidentBytes]]. Must sit ABOVE the distinct
+    * live (site, params) count of a pass: an LRU whose cap is below the
+    * cycle length of a fixed cyclic scan has a 0% hit rate — measured
+    * r16: cap 16 re-paid EVERY memoized build on every bench pass
+    * (e_dedup_incr_minhash 9.55 s/pass vs 0.09 s warm, ~60 s of the
+    * 253 s total). One full pass of every query (r_catalog aside)
+    * leaves 40 entries at sf0.01, and a two-dataset pass (the
+    * ScaleSweep shape) leaves 80, so the default is 128.
     */
   def maxResident: Int =
-    sys.props.get("graft.cache.maxResident").map(_.toInt).getOrElse(64)
+    sys.props.get("graft.cache.maxResident").map(_.toInt).getOrElse(128)
 
   /** Byte budget for pinned Spark storage across all resident entries.
     * Default: a quarter of the JVM heap — small on the spill-rehearsal
@@ -144,14 +138,17 @@ object CacheRegistry {
 
   // ---- the memo ----------------------------------------------------
 
-  /** The memo: cached value for (site, key), else build + register.
-    * `free` must release every Spark storage handle the value pins
-    * (persisted frames, checkpoint RDDs); it runs at eviction, outside
-    * any consumption pin, and must not throw (wrapped defensively).
+  /** The memo: cached value for (site, params), else build + register.
+    * The key is the site, the application id and every build parameter
+    * — pass each value the build reads besides the dataset files.
+    * `free` must release everything the value holds (persisted frames,
+    * checkpoint RDDs, directories, managed tables); it runs at
+    * eviction, outside any consumption pin, and must not throw
+    * (wrapped defensively).
     */
-  def memo[T <: AnyRef](site: String, key: String)(build: => T)(
+  def memo[T <: AnyRef](site: String, params: Any*)(build: => T)(
       free: T => Unit): T = {
-    val k = site + "#" + key
+    val k = (site +: appId +: params).mkString("#")
     while (true) {
       var latch: java.util.concurrent.CountDownLatch = null
       var mine = false
@@ -171,8 +168,11 @@ object CacheRegistry {
         var ok = false
         try {
           val v = build
-          val pinned = persistentIds() -- before
+          val made = persistentIds() -- before
           synchronized {
+            // a nested build's RDDs belong to the nested entry
+            var pinned = made
+            entries.values().forEach(e => pinned --= e.rddIds)
             val e = new Entry(v, () => free(v), pinned)
             entries.put(k, e)
             pinLocked(k, e)
@@ -192,10 +192,48 @@ object CacheRegistry {
     throw new IllegalStateException("unreachable")
   }
 
+  /** The on-disk memo: `build` writes into a fresh temp directory and
+    * returns what its callers need (often just the path); eviction
+    * deletes the directory. A build that throws leaves no directory.
+    */
+  def memoDir[T](site: String, params: Any*)(build: String => T): T =
+    memo(site, params: _*)({
+      val d = tempDir(site)
+      try (d, build(d))
+      catch { case t: Throwable => deleteDir(d); throw t }
+    })(v => deleteDir(v._1))._2
+
+  /** A fresh temp directory owned by a memo build; removed by
+    * [[deleteDir]] at eviction, or at JVM exit if still resident.
+    */
+  def tempDir(site: String): String = {
+    val d = java.nio.file.Files
+      .createTempDirectory("graft_" + site.replace('.', '_')).toString
+    liveDirs.add(d)
+    d
+  }
+
+  def deleteDir(d: String): Unit = {
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))
+    liveDirs.remove(d)
+  }
+
+  /** Directories of resident on-disk entries (observable by specs). */
+  private[graft] val liveDirs =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  // a session ends without evictAll: its on-disk artifacts go with it
+  sys.addShutdownHook(liveDirs.forEach(d =>
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))))
+
+  private def session: Option[SparkSession] =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+
+  private def appId: String =
+    session.map(_.sparkContext.applicationId).getOrElse("-")
+
   private def persistentIds(): Set[Int] =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext.getPersistentRDDs.keySet.toSet)
+    session.map(_.sparkContext.getPersistentRDDs.keySet.toSet)
       .getOrElse(Set.empty)
 
   /** Live pinned bytes of an entry: its recorded RDD ids' current
@@ -208,9 +246,7 @@ object CacheRegistry {
     e.rddIds.iterator.map(id => info.getOrElse(id, 0L)).sum
 
   private def storageBytesById(): Map[Int, Long] =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext.getRDDStorageInfo
+    session.map(_.sparkContext.getRDDStorageInfo
         .map(i => i.id -> (i.memSize + i.diskSize)).toMap)
       .getOrElse(Map.empty)
 
@@ -231,22 +267,25 @@ object CacheRegistry {
       var t = 0L; entries.values().forEach(e => t += entryBytes(e, info)); t
     }
     var progress = true
-    while (progress &&
-        (entries.size > capN || totalBytes > capB)) {
+    while (progress) {
+      // over the count cap any unpinned entry will do; over the byte
+      // budget alone only one that holds bytes frees anything
+      val overCount = entries.size > capN
       progress = false
-      val it = entries.entrySet().iterator()
-      var done = false
-      while (it.hasNext && !done) {
-        val cand = it.next()
-        if (cand.getValue.pins == 0) {
-          it.remove()
-          evicted.incrementAndGet()
-          runFree(cand.getKey, cand.getValue)
-          info = storageBytesById()
-          progress = true
-          done = true
+      if (overCount || totalBytes > capB) {
+        val it = entries.entrySet().iterator()
+        while (it.hasNext && !progress) {
+          val cand = it.next()
+          // pinned entries are skipped: an in-flight consumer holds them
+          if (cand.getValue.pins == 0 &&
+              (overCount || entryBytes(cand.getValue, info) > 0L)) {
+            it.remove()
+            evicted.incrementAndGet()
+            runFree(cand.getKey, cand.getValue)
+            info = storageBytesById()
+            progress = true
+          }
         }
-        // pinned entries are skipped: an in-flight consumer holds them
       }
     }
   }

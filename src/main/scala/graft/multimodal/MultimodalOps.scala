@@ -351,8 +351,7 @@ object MultimodalOps {
   // so a marathon session eventually evicts and a later call rebuilds
   def imageDedup(spark: SparkSession, dir: String,
       maxHamming: Int = 3): DataFrame = {
-    val dh = graft.engine.CacheRegistry.memo("mm.dhash",
-      s"${spark.sparkContext.applicationId}#$dir")(
+    val dh = graft.engine.CacheRegistry.memo("mm.dhash", dir)(
       dHashAll(dedupPngTable(spark, dir)).toDF().persist())(
       _.unpersist(blocking = false))
     val withBands = dh.select(col("doc_id"),

@@ -551,8 +551,7 @@ object CorpusOps {
   // merged-sequence checkpoint blocks; a later call replays the merge
   // loop — bit-identical by the loop's determinism contract.
   private def bpeOf(spark: SparkSession, dir: String): BpeResult =
-    graft.engine.CacheRegistry.memo("corpus.bpe",
-      s"${spark.sparkContext.applicationId}#$dir")(
+    graft.engine.CacheRegistry.memo("corpus.bpe", dir)(
       bpeMergeLoop(Tables.load(spark, dir, "documents")))({ r =>
       graft.engine.CacheRegistry.freeFrame(r.seqs)
       graft.engine.CacheRegistry.freeFrame(r.counts)

@@ -425,8 +425,7 @@ object DedupOps {
     * persisted index buckets.
     */
   private val dedupIncrMinhash: Q = (spark, dir) =>
-    graft.engine.CacheRegistry.memo("dedup.incrminhash",
-      s"${spark.sparkContext.applicationId}#$dir")({
+    graft.engine.CacheRegistry.memo("dedup.incrminhash", dir)({
         val h = Integer.toHexString(dir.hashCode)
         val bandsTbl = s"graft_lshidx_b_$h"
         val featsTbl = s"graft_lshidx_f_$h"
@@ -656,15 +655,13 @@ object DedupOps {
     * rebuilds it to the identical answer.
     */
   private def persistOnce(frame: DataFrame): DataFrame = {
-    val key = frame.sparkSession.sparkContext.applicationId + "#" +
-      frame.queryExecution.analyzed.semanticHash()
-    graft.engine.CacheRegistry.memo("dedup.staged", key)(frame.persist())(
+    graft.engine.CacheRegistry.memo("dedup.staged",
+      frame.queryExecution.analyzed.semanticHash())(frame.persist())(
       _.unpersist(blocking = false))
   }
 
   private val dedupCc: Q = (spark, dir) =>
-    graft.engine.CacheRegistry.memo("dedup.cc",
-      s"${spark.sparkContext.applicationId}#$dir")(
+    graft.engine.CacheRegistry.memo("dedup.cc", dir)(
       connectedMinLabels(ccChainPairs(Tables.load(spark, dir, "documents")))
         .orderBy("id"))(graft.engine.CacheRegistry.freeFrame)
 
@@ -706,8 +703,7 @@ object DedupOps {
     * (app, dataset) like [[dedupCc]].
     */
   private[graft] def lshCcLabels(spark: SparkSession, dir: String): DataFrame =
-    graft.engine.CacheRegistry.memo("dedup.lshcc",
-      s"${spark.sparkContext.applicationId}#$dir")({
+    graft.engine.CacheRegistry.memo("dedup.lshcc", dir)({
         val docs = Tables.load(spark, dir, "documents")
         val staged = md5ShingleFeats(docs)
         val pairs = verifiedPairs(staged,

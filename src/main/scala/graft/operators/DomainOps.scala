@@ -349,8 +349,7 @@ object DomainOps {
     * the extraction chain itself.
     */
   private[graft] def linkEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.engine.CacheRegistry.memo("domain.linkEdges",
-      s"${spark.sparkContext.applicationId}#$dir")({
+    graft.engine.CacheRegistry.memo("domain.linkEdges", dir)({
         linkEdgesWithUrl(spark, dir).select("src_doc", "dst_doc")
           .localCheckpoint(true)
       })(graft.engine.CacheRegistry.freeFrame)

@@ -125,8 +125,7 @@ object GraphOps {
     * them all; CacheRegistry-managed like domain.linkEdges.
     */
   private def coEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.engine.CacheRegistry.memo("graph.coEdges",
-      s"${spark.sparkContext.applicationId}#$dir")({
+    graft.engine.CacheRegistry.memo("graph.coEdges", dir)({
         coPurchaseEdges(Tables.load(spark, dir, "lineitem"))
           .localCheckpoint(true)
       })(graft.engine.CacheRegistry.freeFrame)
@@ -386,8 +385,7 @@ object GraphOps {
     * label table.
     */
   private[graft] def danglingWalk(spark: SparkSession, dir: String): DataFrame =
-    graft.engine.CacheRegistry.memo("graph.danglingWalk",
-      s"${spark.sparkContext.applicationId}#$dir")({
+    graft.engine.CacheRegistry.memo("graph.danglingWalk", dir)({
         pageRankDangling(DomainOps.linkEdges(spark, dir)
           .where(pmod(col("src_doc"), lit(3L)) =!= 0)
           .select(col("src_doc").as("src"), col("dst_doc").as("dst")))

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,7 +24,7 @@ import graft.sources.Bucketing
   *    the driver gate via e_plan_audit's n_pruned column) prove the
   *    filter never touches the other partitions' files.
   *
-  * Both builds are memoized per (application, dir) — repeated bench
+  * The builds are memoized per (application, dir) — repeated bench
   * passes and the plan audit reuse one layout, exactly as production
   * reuses the table it bucketed/partitioned at ingest time. Staleness
   * contract matches the IVF index ([[SimilarityOps.buildIvfIndex]]):
@@ -39,24 +37,22 @@ object LayoutOps {
   // Bucketed co-located join
   // ---------------------------------------------------------------- //
 
-  private val bucketedCache = new ConcurrentHashMap[String, (String, String)]()
-
   /** Build (or fetch) the bucketed twin tables of lineitem/orders for
     * `dir`, bucketed into the same count on the join key. Table names
-    * carry a dir fingerprint so sf0.001/0.01/0.1 coexist in one
-    * session catalog.
+    * carry a dir fingerprint and the bucket count so sf0.001/0.01/0.1
+    * and every bucketing coexist in one session catalog; eviction
+    * drops both tables.
     */
   def bucketedOrderTables(spark: SparkSession, dir: String,
       buckets: Int = 16): (String, String) = {
-    val key = s"${spark.sparkContext.applicationId}#$dir#$buckets"
-    bucketedCache.computeIfAbsent(key, _ => {
-      val fp = java.lang.Long.toHexString(
-        org.apache.spark.unsafe.hash.Murmur3_x86_32.hashUnsafeBytes(
-          dir.getBytes("UTF-8"),
-          org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
-          dir.length, 42) & 0xffffffffL)
-      val lt = s"b_lineitem_$fp"
-      val ot = s"b_orders_$fp"
+    val fp = java.lang.Long.toHexString(
+      org.apache.spark.unsafe.hash.Murmur3_x86_32.hashUnsafeBytes(
+        dir.getBytes("UTF-8"),
+        org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
+        dir.length, 42) & 0xffffffffL)
+    val lt = s"b_lineitem_${fp}_$buckets"
+    val ot = s"b_orders_${fp}_$buckets"
+    graft.engine.CacheRegistry.memo("layout.bucketed", dir, buckets)({
       Bucketing.saveBucketed(
         Tables.load(spark, dir, "lineitem")
           .select("l_orderkey", "l_extendedprice"),
@@ -67,7 +63,7 @@ object LayoutOps {
           .withColumnRenamed("o_orderkey", "l_orderkey"),
         ot, "l_orderkey", buckets)
       (lt, ot)
-    })
+    })(_ => Seq(lt, ot).foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t")))
   }
 
   /** Exchange-free fact⋈fact join over the bucketed layout: priority-
@@ -96,24 +92,18 @@ object LayoutOps {
   // Partition-pruned scan
   // ---------------------------------------------------------------- //
 
-  private val partitionedCache = new ConcurrentHashMap[String, String]()
-
   /** Write (or fetch) the date-partitioned layout of `events` for
     * `dir`: `<tmp>/d=<yyyy-MM-dd>/part-*.parquet`, one directory per
     * event date — the ingest-time layout every time-series corpus
     * should have.
     */
-  def partitionedEventsDir(spark: SparkSession, dir: String): String = {
-    val key = s"${spark.sparkContext.applicationId}#$dir"
-    partitionedCache.computeIfAbsent(key, _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_events_by_day").toString
+  def partitionedEventsDir(spark: SparkSession, dir: String): String =
+    graft.engine.CacheRegistry.memoDir("layout.partitioned", dir) { out =>
       Tables.load(spark, dir, "events")
         .withColumn("d", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("d").parquet(out)
       out
-    })
-  }
+    }
 
   /** One-day slice over the partitioned layout: the `d = DATE'...'`
     * predicate is a partition filter, so the scan lists exactly one
@@ -174,27 +164,20 @@ object LayoutOps {
     (outDir, nFiles)
   }
 
-  private val compactedCache = new ConcurrentHashMap[String, (String, String, Int)]()
-
   /** Build (or fetch) the compaction fixture for `dir`: `documents`
     * deliberately shredded into 48 round-robin fragments, then
     * compacted to ~128 KB files clustered on doc_id. Returns
     * (fragmentedDir, compactedDir, plannedFiles).
     */
-  def compactedDocsDirs(spark: SparkSession, dir: String): (String, String, Int) = {
-    val key = s"${spark.sparkContext.applicationId}#$dir"
-    compactedCache.computeIfAbsent(key, _ => {
-      val frag = java.nio.file.Files
-        .createTempDirectory("graft_docs_frag").toString
-      val comp = java.nio.file.Files
-        .createTempDirectory("graft_docs_compact").toString
+  def compactedDocsDirs(spark: SparkSession, dir: String): (String, String, Int) =
+    graft.engine.CacheRegistry.memoDir("layout.compacted", dir) { root =>
+      val frag = s"$root/frag"
       Tables.load(spark, dir, "documents")
         .repartition(48)
         .write.mode("overwrite").parquet(frag)
-      val (_, n) = compact(spark, frag, comp, "doc_id", 128L * 1024)
+      val (comp, n) = compact(spark, frag, s"$root/compact", "doc_id", 128L * 1024)
       (frag, comp, n)
-    })
-  }
+    }
 
   /** Lossless-compaction proof over the compacted layout: per-language
     * doc counts, char totals, and an order-independent content

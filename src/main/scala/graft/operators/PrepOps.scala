@@ -229,25 +229,15 @@ object PrepOps {
     * proves they compose. The oracle chains the BPE-round replay into
     * the packing window directly — publication must be invisible.
     */
-  private val tokPackPublished =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def tokPackRoot(spark: SparkSession, dir: String): String =
-    tokPackPublished.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}#$dir", _ => {
-        val root =
-          java.nio.file.Files.createTempDirectory("graft_tokpack").toString
-        sys.addShutdownHook {
-          org.apache.commons.io.FileUtils
-            .deleteQuietly(new java.io.File(root))
-        }
-        val sized = Tables.load(spark, dir, "documents")
-          .select("doc_id", "lang")
-          .join(CorpusOps.bpeTokenCounts(spark, dir), "doc_id")
-          .select("lang", "doc_id", "n_tok")
-        graft.sources.AtomicPublish.publish(packCounted(sized), root)
-        root
-      })
+    graft.engine.CacheRegistry.memoDir("prep.tokpack", dir) { root =>
+      val sized = Tables.load(spark, dir, "documents")
+        .select("doc_id", "lang")
+        .join(CorpusOps.bpeTokenCounts(spark, dir), "doc_id")
+        .select("lang", "doc_id", "n_tok")
+      graft.sources.AtomicPublish.publish(packCounted(sized), root)
+      root
+    }
 
   private val tokenizePackQ: Q = (spark, dir) =>
     graft.sources.AtomicPublish

@@ -99,14 +99,10 @@ object QualityModelOps {
   // (app, dataset) so the train/infer gate rows, bench warm passes,
   // and downstream compositions (e_pipeline_crawl_model) pay it once
   // (the bpeOf / persistedIndexPath discipline).
-  private val trajCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[(Int, Array[Double])]]()
-
   private def trajectoryOf(spark: SparkSession, dir: String)
       : Seq[(Int, Array[Double])] =
-    trajCache.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}#$dir",
-      _ => train(features(Tables.load(spark, dir, "documents"))))
+    graft.engine.CacheRegistry.memo("quality.traj", dir)(
+      train(features(Tables.load(spark, dir, "documents"))))(_ => ())
 
   /** FROZEN final weights for a dataset — the serve-side contract
     * (e_stream_quality_model's discipline): train once, score

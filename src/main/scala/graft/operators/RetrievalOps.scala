@@ -73,9 +73,6 @@ object RetrievalOps {
   private[graft] val indexBuilds =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Bm25Index]()
-
   val Bm25K = 3
 
   /** Fixed two-term probe queries for the gate row (terms drawn from
@@ -183,10 +180,22 @@ object RetrievalOps {
     */
   def buildBm25Index(spark: SparkSession, dir: String,
       buckets: Int = 8): Bm25Index =
-    indexCache.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}#$dir", _ =>
-        buildBm25IndexFor(Tables.load(spark, dir, "documents"),
-          s"graft_bm25_idx_${Integer.toHexString(dir.hashCode)}", buckets))
+    memoIndex(spark, dir, s"idx_$buckets")(
+      buildBm25IndexFor(Tables.load(spark, dir, "documents"), _, buckets))
+
+  /** The memo of a dataset's managed-table index, one per lane (the
+    * lane names every build parameter): tables and epoch markers live
+    * under `graft_bm25_<lane>_<dir hash>`, dropped before the build (a
+    * rebuild starts from a clean prefix) and at eviction.
+    */
+  private def memoIndex(spark: SparkSession, dir: String, lane: String)(
+      build: String => Bm25Index): Bm25Index = {
+    val prefix = s"graft_bm25_${lane}_${Integer.toHexString(dir.hashCode)}"
+    graft.engine.CacheRegistry.memo("retrieval.bm25", dir, lane)({
+      graft.sources.Bucketing.dropManaged(spark, prefix)
+      build(prefix)
+    })(_ => graft.sources.Bucketing.dropManaged(spark, prefix))
+  }
 
   /** INCREMENTAL APPEND — the index-maintenance half of the lexical
     * family (the [[SimilarityOps]] appendToIvfIndex /
@@ -457,33 +466,22 @@ object RetrievalOps {
   private val bm25MultiQ: Q = (spark, dir) =>
     bm25TopKOverN(spark, buildBm25Index(spark, dir), MultiQueries)
 
-  /** Deterministic base/batch split for the incremental gate row:
-    * every 10th document arrives "later" and is appended.
-    */
-  private val incrCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Bm25Index]()
-
-  /** Gate row: build the index WITHOUT the doc_id % 10 == 0 documents,
+  /** Gate row: build the index WITHOUT the doc_id % 10 == 0 documents
+    * (a deterministic split: every 10th document arrives "later"),
     * append them through [[appendToBm25Index]], probe. The oracle is
     * the full-corpus BM25 replay VERBATIM — an appended index must be
     * indistinguishable from a from-scratch build.
     */
   private val bm25IncrQ: Q = (spark, dir) => {
-    val idx = incrCache.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}#$dir", _ => {
-        val docs = Tables.load(spark, dir, "documents")
-        val base = buildBm25IndexFor(
-          docs.where(col("doc_id") % 10 =!= 0),
-          s"graft_bm25_incr_${Integer.toHexString(dir.hashCode)}")
-        // batchId = 0: the gate exercises the exactly-once epoch path
-        appendToBm25Index(base, docs.where(col("doc_id") % 10 === 0),
-          batchId = 0L)
-      })
+    val idx = memoIndex(spark, dir, "incr") { p =>
+      val docs = Tables.load(spark, dir, "documents")
+      val base = buildBm25IndexFor(docs.where(col("doc_id") % 10 =!= 0), p)
+      // batchId = 0: the gate exercises the exactly-once epoch path
+      appendToBm25Index(base, docs.where(col("doc_id") % 10 === 0),
+        batchId = 0L)
+    }
     bm25TopKOver(spark, idx)
   }
-
-  private val compactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Bm25Index]()
 
   /** Gate row: build-without-tenth, append the tenth (epoch path),
     * COMPACT, probe. A compacted index must be indistinguishable from
@@ -491,16 +489,13 @@ object RetrievalOps {
     * VERBATIM (the e_bm25_incr contract extended through compaction).
     */
   private val bm25CompactQ: Q = (spark, dir) => {
-    val idx = compactCache.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}#$dir", _ => {
-        val docs = Tables.load(spark, dir, "documents")
-        val base = buildBm25IndexFor(
-          docs.where(col("doc_id") % 10 =!= 0),
-          s"graft_bm25_cpt_${Integer.toHexString(dir.hashCode)}")
-        compactBm25Index(spark,
-          appendToBm25Index(base, docs.where(col("doc_id") % 10 === 0),
-            batchId = 0L))
-      })
+    val idx = memoIndex(spark, dir, "cpt") { p =>
+      val docs = Tables.load(spark, dir, "documents")
+      val base = buildBm25IndexFor(docs.where(col("doc_id") % 10 =!= 0), p)
+      compactBm25Index(spark,
+        appendToBm25Index(base, docs.where(col("doc_id") % 10 === 0),
+          batchId = 0L))
+    }
     bm25TopKOver(spark, idx)
   }
 

@@ -106,8 +106,7 @@ object SetJoinOps {
     * (session, dir), the same memo pattern as DedupOps' staged feats.
     */
   private[operators] def stagedFeats(spark: SparkSession, dir: String): DataFrame =
-    graft.engine.CacheRegistry.memo("setjoin.staged",
-      s"${spark.sparkContext.applicationId}|$dir")(
+    graft.engine.CacheRegistry.memo("setjoin.staged", dir)(
       shingleFeats(Tables.load(spark, dir, "documents")).persist())(
       _.unpersist(blocking = false))
 

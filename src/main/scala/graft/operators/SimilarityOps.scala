@@ -293,8 +293,7 @@ object SimilarityOps {
     */
   def buildIvfIndex(spark: SparkSession, dir: String, nlist: Int = 16,
       iters: Int = 2): IvfIndex = {
-    val key = s"${spark.sparkContext.applicationId}#$dir#$nlist#$iters"
-    graft.engine.CacheRegistry.memo("sim.ivf", key)({
+    graft.engine.CacheRegistry.memo("sim.ivf", dir, nlist, iters)({
       val emb = Tables.load(spark, dir, "embeddings")
       val centroids = kmeansCentroids(emb, nlist, iters)
       val assigned = emb.withColumn("cell", assignCell(centroids)).persist()
@@ -969,9 +968,6 @@ object SimilarityOps {
     probeIvf(buildIvfIndex(spark, dir), vectorOf(spark, dir, 0L),
       nprobe = 4, k = 10, excludeId = 0L)
 
-  private val ivfDiskCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** IVF ANN against the PERSISTED index: first invocation per dataset
     * builds and writes the index (a batch job in production), then the
     * probe itself always goes through [[loadIvfIndex]] — centroids
@@ -982,23 +978,14 @@ object SimilarityOps {
   /** Build-once path of the persisted default index for a dataset
     * (shared by the persisted cosine probe AND the persisted ADC
     * probe — one on-disk index, two scoring modes, as in production).
+    * The index is a full parquet copy of the embeddings table, so it
+    * lives in a registry-owned directory: eviction (or JVM exit)
+    * deletes it.
     */
   private[graft] def persistedIndexPath(spark: SparkSession, dir: String): String =
-    ivfDiskCache.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}#$dir", _ => {
-        val p = java.nio.file.Files.createTempDirectory("graft_ivf").toString
-        // The index is a full parquet copy of the embeddings table;
-        // without cleanup every session leaks one under /tmp. A JVM
-        // shutdown hook bounds the leak to the process lifetime (a
-        // production deployment would instead write the index under a
-        // managed warehouse path with its own retention policy).
-        sys.addShutdownHook {
-          org.apache.commons.io.FileUtils
-            .deleteQuietly(new java.io.File(p))
-        }
-        saveIvfIndex(buildIvfIndex(spark, dir), p)
-        p
-      })
+    graft.engine.CacheRegistry.memoDir("sim.ivfdisk", dir) { p =>
+      saveIvfIndex(buildIvfIndex(spark, dir), p); p
+    }
 
   private val annIvfPersisted: Q = (spark, dir) =>
     probeIvf(loadIvfIndex(spark, persistedIndexPath(spark, dir)),
@@ -1281,8 +1268,7 @@ object SimilarityOps {
     * checkpoint blocks; a rebuild re-splits deterministically).
     */
   private def splitCells(spark: SparkSession, dir: String): DataFrame =
-    graft.engine.CacheRegistry.memo("sim.split",
-      s"${spark.sparkContext.applicationId}#$dir")({
+    graft.engine.CacheRegistry.memo("sim.split", dir)({
         val c = splitOversized(buildIvfIndex(spark, dir).assigned)
         c.count()
         c
@@ -1400,8 +1386,7 @@ object SimilarityOps {
     */
   private def pqCodebooks(spark: SparkSession, dir: String)
       : Array[Array[Array[Double]]] =
-    graft.engine.CacheRegistry.memo("sim.pqcb",
-      s"${spark.sparkContext.applicationId}#$dir")(
+    graft.engine.CacheRegistry.memo("sim.pqcb", dir)(
       pqCodebooksTrained(Tables.load(spark, dir, "embeddings")))(_ => ())
 
   /** Seed-slice codebook INIT from any (vec_id, embedding) frame — the
@@ -1673,8 +1658,7 @@ object SimilarityOps {
     */
   private def structuredLane(spark: SparkSession,
       dir: String): (IvfIndex, Seq[Double]) = {
-    val (idx, q, _) = graft.engine.CacheRegistry.memo("sim.structured",
-      s"${spark.sparkContext.applicationId}#$dir")({
+    val (idx, q, _) = graft.engine.CacheRegistry.memo("sim.structured", dir)({
         val sv = structuredEmbeddings(spark, dir).persist()
         val cents = kmeansCentroids(sv, 16, 2)
         val assigned = sv.withColumn("cell", assignCell(cents)).persist()
@@ -1704,8 +1688,7 @@ object SimilarityOps {
     // PqTrainIters encode+aggregate Spark jobs, so an unmemoized call
     // would retrain on every bench warm pass (free is a no-op — the
     // value is driver-side arrays, nothing pinned)
-    val cb = graft.engine.CacheRegistry.memo("sim.structcb",
-      s"${spark.sparkContext.applicationId}#$dir")(
+    val cb = graft.engine.CacheRegistry.memo("sim.structcb", dir)(
       pqCodebooksTrained(idx.assigned))(_ => ())
     val adc = ivfPqProbe(idx, cb, q, excludeId = 0L).select("vec_id")
     val exact = idx.assigned

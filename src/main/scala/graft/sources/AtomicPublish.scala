@@ -230,17 +230,12 @@ object AtomicPublish {
     * verify) reads the committed version — the realistic
     * write-once/read-many handoff shape.
     */
-  private val published =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def publishRoot(spark: SparkSession, dir: String): String =
-    published.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}#$dir", _ => {
-        val root = Files.createTempDirectory("graft_publish").toString
-        publish(Tables.load(spark, dir, "documents")
-          .select("doc_id", "lang", "source", "n_chars"), root)
-        root
-      })
+    graft.engine.CacheRegistry.memoDir("publish.roundtrip", dir) { root =>
+      publish(Tables.load(spark, dir, "documents")
+        .select("doc_id", "lang", "source", "n_chars"), root)
+      root
+    }
 
   /** Round-trip contract: the published snapshot read back through the
     * manifest must hash-equal its source relation (oracle = the same
@@ -281,19 +276,14 @@ object AtomicPublish {
 
   // publish-once memo for the two-version diff root (v1 = base
   // projection, v2 = the derived release; keepVersions = 2 retains both)
-  private val diffPublished =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def diffRoot(spark: SparkSession, dir: String): String =
-    diffPublished.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}#$dir", _ => {
-        val root = Files.createTempDirectory("graft_publish_diff").toString
-        val base = Tables.load(spark, dir, "documents")
-          .select("doc_id", "n_chars")
-        publish(base, root, keepVersions = 2)
-        publish(releaseChanges(base), root, keepVersions = 2)
-        root
-      })
+    graft.engine.CacheRegistry.memoDir("publish.diff", dir) { root =>
+      val base = Tables.load(spark, dir, "documents")
+        .select("doc_id", "n_chars")
+      publish(base, root, keepVersions = 2)
+      publish(releaseChanges(base), root, keepVersions = 2)
+      root
+    }
 
   /** "What changed in this release" — the audit every dataset handoff
     * needs: diff the two RETAINED versions of a publish root (v(N−1)

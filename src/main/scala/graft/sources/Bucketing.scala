@@ -19,6 +19,32 @@ object Bucketing {
       .format("parquet")
       .saveAsTable(table)
 
+  /** Drop everything a build left in the session catalog under a table
+    * prefix: every table named `prefix` or `prefix_…`, and the epoch
+    * markers beside them in the warehouse (`_graft_<kind>_<prefix>…`
+    * with their lock and tmp siblings). Memo builds call it before
+    * writing, so a rebuild never meets a stale replay guard, and their
+    * eviction calls it to release what the build made.
+    */
+  def dropManaged(spark: SparkSession, prefix: String): Unit = {
+    spark.sql("SHOW TABLES").collect()
+      .filter(r => !r.getAs[Boolean]("isTemporary"))
+      .map(_.getAs[String]("tableName"))
+      .filter(t => t == prefix || t.startsWith(prefix + "_"))
+      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    val wh = spark.conf.get("spark.sql.warehouse.dir")
+    val dir = java.nio.file.Paths.get(
+      Option(new java.net.URI(wh).getPath).getOrElse(wh))
+    val marker = ("_graft_[a-z0-9]+_" + java.util.regex.Pattern.quote(prefix) +
+      "(_[A-Za-z0-9_]*)?\\.epoch\\.json.*").r
+    if (java.nio.file.Files.isDirectory(dir)) {
+      val ls = java.nio.file.Files.list(dir)
+      try ls.filter(p => marker.matches(p.getFileName.toString))
+        .forEach(p => java.nio.file.Files.deleteIfExists(p))
+      finally ls.close()
+    }
+  }
+
   /** Join two bucketed tables on their bucket key. When both sides are
     * bucketed into the same count, the physical plan shows
     * SortMergeJoin with no ShuffleExchange upstream.

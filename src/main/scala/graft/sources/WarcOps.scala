@@ -455,8 +455,7 @@ object WarcOps {
     import org.apache.spark.sql.expressions.Window
     import graft.operators.{DedupOps, PrepOps, QualityModelOps}
     val split = graft.streaming.StreamingOps.PipelineSplitId
-    val pool = graft.engine.CacheRegistry.memo("warc.neardup",
-      s"${spark.sparkContext.applicationId}#$dir")({
+    val pool = graft.engine.CacheRegistry.memo("warc.neardup", dir)({
         val h = Integer.toHexString(dir.hashCode)
         val bandsTbl = s"graft_pipelsh_b_$h"
         val featsTbl = s"graft_pipelsh_f_$h"

@@ -256,8 +256,7 @@ object StreamingOps {
       capPairsPerKey: Option[Int] = None): DataFrame = {
     val pairs = capPairsPerKey match {
       case None => drainClickViewPairs(spark, dir)
-      case Some(_) => graft.engine.CacheRegistry.memo("stream.drained",
-        s"${spark.sparkContext.applicationId}#$dir")(
+      case Some(_) => graft.engine.CacheRegistry.memo("stream.drained", dir)(
         drainClickViewPairs(spark, dir))(graft.engine.CacheRegistry.freeFrame)
     }
     val kept = capPairsPerKey match {
@@ -714,9 +713,6 @@ object StreamingOps {
     }
   }
 
-  private val ingestPublished =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Day split for [[runFullPipelineStream]]: 103 ≡ 3 (mod 4), so the
     * canonical-URL group {102, 103} straddles the two micro-batches
     * AND its odd member survives the HTTP-status filter — the
@@ -844,22 +840,43 @@ object StreamingOps {
       case None => winners
     }
     val out = survivors
-      .withColumn("kept", WarcOps.gateColumn(spark, w))
+      // the batch runs in the stream's cloned session: the blocklist
+      // function must be registered there, not only on the caller's
+      .withColumn("kept", WarcOps.gateColumn(batch.sparkSession, w))
       .join(tokCounts, Seq("doc_id"), "left")
       .select(col("doc_id"), col("domain"), col("canon_url"),
         col("kept"), coalesce(col("n_tok"), lit(0L)).as("n_tok"))
     AtomicPublish.publishStreamBatch(out, root, batchId)
   }
 
+  /** Publish-once memo of the streamed ingest/pipeline lanes: `run`
+    * streams into a fresh publish root under the versioned LSH index
+    * `lsh` (when the lane dedups). The build drops that index first —
+    * a leftover epoch marker would make the rebuild's replay guard
+    * swallow day 1 — and eviction deletes both the root and the index.
+    */
+  private def ingestRoot(spark: SparkSession, dir: String, lane: String,
+      lsh: Option[String])(run: String => Unit): String = {
+    import graft.engine.CacheRegistry
+    import graft.sources.Bucketing
+    CacheRegistry.memo("stream.ingest", dir, lane)({
+      lsh.foreach(Bucketing.dropManaged(spark, _))
+      val root = CacheRegistry.tempDir("stream.ingest")
+      run(root)
+      root
+    })(root => {
+      CacheRegistry.deleteDir(root)
+      lsh.foreach(Bucketing.dropManaged(spark, _))
+    })
+  }
+
+  private def lshPrefix(kind: String, dir: String): String =
+    s"graft_${kind}_${Integer.toHexString(dir.hashCode)}"
+
   private val streamPipelineFull: Q = (spark, dir) => {
     import graft.operators.PrepOps
-    val root = ingestPublished.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}#$dir#pipeline", _ => {
-        val r = java.nio.file.Files
-          .createTempDirectory("graft_pipe_pub").toString
-        runFullPipelineStream(spark, dir, r)
-        r
-      })
+    val root = ingestRoot(spark, dir, "pipeline", None)(
+      runFullPipelineStream(spark, dir, _))
     PrepOps.packCounted(
         graft.sources.AtomicPublish.readStreamPublished(spark, root)
           .where(col("kept"))
@@ -876,14 +893,9 @@ object StreamingOps {
     */
   private val streamPipelineNearDup: Q = (spark, dir) => {
     import graft.operators.PrepOps
-    val root = ingestPublished.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}#$dir#pipeline_nd", _ => {
-        val r = java.nio.file.Files
-          .createTempDirectory("graft_pipe_nd_pub").toString
-        runFullPipelineStream(spark, dir, r, lshPrefix = Some(
-          s"graft_pipelsh_s_${Integer.toHexString(dir.hashCode)}"))
-        r
-      })
+    val lsh = lshPrefix("pipelsh_s", dir)
+    val root = ingestRoot(spark, dir, "pipeline_nd", Some(lsh))(
+      runFullPipelineStream(spark, dir, _, Some(lsh)))
     PrepOps.packCounted(
         graft.sources.AtomicPublish.readStreamPublished(spark, root)
           .where(col("kept"))
@@ -894,14 +906,9 @@ object StreamingOps {
   }
 
   private val streamIngestDedup: Q = (spark, dir) => {
-    val root = ingestPublished.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}#$dir", _ => {
-        val r = java.nio.file.Files
-          .createTempDirectory("graft_ingest_pub").toString
-        runIngestDedupStream(spark, dir,
-          s"graft_ingest_lsh_${Integer.toHexString(dir.hashCode)}", r)
-        r
-      })
+    val lsh = lshPrefix("ingest_lsh", dir)
+    val root = ingestRoot(spark, dir, "dedup", Some(lsh))(
+      runIngestDedupStream(spark, dir, lsh, _))
     graft.sources.AtomicPublish.readStreamPublished(spark, root)
       .orderBy("doc_id")
   }
@@ -913,15 +920,9 @@ object StreamingOps {
     * gap). Own memo key, own prefix, own publish root.
     */
   private val streamIngestCompact: Q = (spark, dir) => {
-    val root = ingestPublished.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}#$dir#compact", _ => {
-        val r = java.nio.file.Files
-          .createTempDirectory("graft_ingest_pub_c").toString
-        runIngestDedupStream(spark, dir,
-          s"graft_ingest_lshc_${Integer.toHexString(dir.hashCode)}", r,
-          compactBetweenDays = true)
-        r
-      })
+    val lsh = lshPrefix("ingest_lshc", dir)
+    val root = ingestRoot(spark, dir, "compact", Some(lsh))(
+      runIngestDedupStream(spark, dir, lsh, _, compactBetweenDays = true))
     graft.sources.AtomicPublish.readStreamPublished(spark, root)
       .orderBy("doc_id")
   }
@@ -993,21 +994,14 @@ object StreamingOps {
     }
   }
 
-  private val ivfIngested =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Gate row: probe the STREAMED-AND-COMPACTED index with the
     * e_ann_ivf_persisted probe — identical answer, identical oracle.
     */
   private val streamIngestIvf: Q = (spark, dir) => {
     import graft.operators.SimilarityOps
-    val path = ivfIngested.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}#$dir", _ => {
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_ivf_ing_idx").toString
-        runIvfIngestStream(spark, dir, p)
-        p
-      })
+    val path = graft.engine.CacheRegistry.memoDir("stream.ivf", dir) { p =>
+      runIvfIngestStream(spark, dir, p); p
+    }
     SimilarityOps.probeIvf(SimilarityOps.loadIvfIndexVersioned(spark, path),
       SimilarityOps.vectorOf(spark, dir, 0L),
       nprobe = 4, k = 10, excludeId = 0L)
@@ -1015,17 +1009,10 @@ object StreamingOps {
 
   // publish-once memo (the AtomicPublish.publishRoot shape): first
   // call streams + commits, every later pass reads the manifest
-  private val streamPublished =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private val streamPublish: Q = (spark, dir) => {
-    val root = streamPublished.computeIfAbsent(
-      s"${spark.sparkContext.applicationId}#$dir", _ => {
-        val r = java.nio.file.Files
-          .createTempDirectory("graft_stream_publish").toString
-        replayPublishStream(spark, dir, r)
-        r
-      })
+    val root = graft.engine.CacheRegistry.memoDir("stream.publish", dir) { r =>
+      replayPublishStream(spark, dir, r); r
+    }
     graft.sources.AtomicPublish.readStreamPublished(spark, root)
       .orderBy("doc_id")
   }

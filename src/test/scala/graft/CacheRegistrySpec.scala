@@ -93,9 +93,11 @@ class CacheRegistrySpec extends SparkSpec {
   test("byte-budget LRU: entries' MEASURED pinned storage counts " +
       "against maxResidentBytes and the LRU frame is evicted under a " +
       "tight byte cap while a tiny driver-side entry survives") {
-    CacheRegistry.evictAll()
     val savedB = sys.props.get("graft.cache.maxResidentBytes")
-    try {
+    // the byte-free entry both after and BEFORE the first frame: byte
+    // pressure must skip it even when it is the LRU entry
+    for (tinyFirst <- Seq(false, true)) try {
+      CacheRegistry.evictAll()
       var freed = List.empty[String]
       // distinct row counts per key: identical plans would be deduped
       // by the CacheManager (one shared InMemoryRelation), and the
@@ -107,22 +109,26 @@ class CacheRegistrySpec extends SparkSpec {
           df.count()
           df
         })(df => { freed ::= k; df.unpersist(blocking = true) })
+      // driver-side value: pins no Spark storage, counts 0 bytes
+      def putTiny(): Unit =
+        CacheRegistry.memo("spec.bytes", "tiny")("just-a-string")(_ => ())
+      if (tinyFirst) putTiny()
       putFrame("f1", 200000L)
       val oneFrame = CacheRegistry.residentBytes
       assert(oneFrame > 0L,
         "persisted frame bytes must be measured from storage status")
-      // driver-side value: pins no Spark storage, counts 0 bytes
-      CacheRegistry.memo("spec.bytes", "tiny")("just-a-string")(_ => ())
+      if (!tinyFirst) putTiny()
       assert(CacheRegistry.residentBytes == oneFrame)
       // cap below two frames (but above one): inserting f2 must evict
-      // the LRU frame f1 — and NOT the byte-free tiny entry before it
+      // the LRU frame f1 — and NOT the byte-free tiny entry
       sys.props("graft.cache.maxResidentBytes") = (oneFrame * 3 / 2).toString
       putFrame("f2", 250000L)
       assert(freed == List("f1"), s"expected f1 evicted, got $freed")
       assert(CacheRegistry.residentBytes <= oneFrame * 3 / 2)
       var rebuiltTiny = 0
       CacheRegistry.memo("spec.bytes", "tiny")({ rebuiltTiny += 1; "x" })(_ => ())
-      assert(rebuiltTiny == 0, "byte-free entry was evicted by byte pressure")
+      assert(rebuiltTiny == 0,
+        s"byte-free entry was evicted by byte pressure (tinyFirst=$tinyFirst)")
     } finally {
       savedB match {
         case Some(v) => sys.props("graft.cache.maxResidentBytes") = v
@@ -130,6 +136,21 @@ class CacheRegistrySpec extends SparkSpec {
       }
       CacheRegistry.evictAll()
     }
+  }
+
+  test("a nested build is charged once: after a cold sim.split build " +
+      "residentBytes equals the storage bytes of the distinct RDDs") {
+    CacheRegistry.evictAll()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    // semDedup's split memo wraps the IVF memo (sim.split → sim.ivf)
+    graft.operators.SimilarityOps.semDedup(spark, sf)
+    val made = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val bytes = spark.sparkContext.getRDDStorageInfo
+      .filter(i => made.contains(i.id)).map(i => i.memSize + i.diskSize).sum
+    assert(CacheRegistry.resident >= 2 && bytes > 0L)
+    assert(CacheRegistry.residentBytes == bytes,
+      s"resident ${CacheRegistry.residentBytes} B vs $bytes B stored")
+    CacheRegistry.evictAll()
   }
 
   test("consumption pins: a scoped caller's entries survive another " +
@@ -211,15 +232,30 @@ class CacheRegistrySpec extends SparkSpec {
 
   test("the gate queries that ride memoized indexes survive " +
       "evict-rebuild cycles (IVF probe + BPE vocab)") {
+    // one gate query per memo site that once kept a private map, plus
+    // the original IVF/BPE pair: same hash after a cold reset, nothing
+    // resident after it, and no directory of a freed entry left behind
+    val gates = Seq("e_ann_ivf", "e_bpe_vocab",
+      "e_stream_pipeline_full", "e_stream_pipeline_neardup",
+      "e_stream_ingest_dedup", "e_stream_ingest_compact",
+      "e_stream_ingest_ivf", "e_stream_publish", "e_ann_ivf_persisted",
+      "e_bm25_topk", "e_bm25_multi", "e_bm25_incr", "e_bm25_compact",
+      "e_pipeline_tokenize_pack", "e_quality_train", "e_pipeline_full",
+      "e_bucketed_join", "e_partition_prune", "e_compact", "e_plan_audit",
+      "e_publish_roundtrip", "e_publish_diff")
+    def hashes(): Map[String, String] = gates.map(q =>
+      q -> CacheRegistry.scoped(md5Of(SparkEntry.queries(q)(spark, sf)))).toMap
     CacheRegistry.evictAll()
-    val ivf1 = md5Of(SparkEntry.queries("e_ann_ivf")(spark, sf))
-    val bpe1 = md5Of(SparkEntry.queries("e_bpe_vocab")(spark, sf))
+    val first = hashes()
+    val dirs = CacheRegistry.liveDirs.toArray(Array.empty[String]).toSeq
+    assert(dirs.size >= 12, s"on-disk entries not registered: $dirs")
     CacheRegistry.evictAll()
     assert(CacheRegistry.resident == 0)
-    val ivf2 = md5Of(SparkEntry.queries("e_ann_ivf")(spark, sf))
-    val bpe2 = md5Of(SparkEntry.queries("e_bpe_vocab")(spark, sf))
-    assert(ivf2 == ivf1, "IVF probe diverged after eviction")
-    assert(bpe2 == bpe1, "BPE vocab diverged after eviction")
+    assert(CacheRegistry.liveDirs.isEmpty)
+    val left = dirs.filter(d => new java.io.File(d).exists)
+    assert(left.isEmpty, s"freed entries left directories: $left")
+    val second = hashes()
+    gates.foreach(q => assert(second(q) == first(q), s"$q diverged after eviction"))
     CacheRegistry.evictAll()
   }
 }

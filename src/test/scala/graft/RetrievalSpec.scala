@@ -304,4 +304,21 @@ class RetrievalSpec extends SparkSpec {
     assert(out.forall(_.getDouble(2) > 0.0))
     assert(idx.nDocs > 0 && idx.totalTokens > 0)
   }
+
+  test("the index memo keys on the bucket count, and eviction drops " +
+      "the index tables") {
+    def numBuckets(table: String): String =
+      spark.sql(s"DESCRIBE TABLE EXTENDED $table").collect()
+        .find(_.getString(0) == "Num Buckets").map(_.getString(1).trim)
+        .getOrElse("none")
+    val idx8 = RetrievalOps.buildBm25Index(spark, sf)
+    val idx4 = RetrievalOps.buildBm25Index(spark, sf, buckets = 4)
+    assert(idx4.table != idx8.table,
+      "a 4-bucket request returned the 8-bucket index")
+    assert(numBuckets(idx4.table) == "4" && numBuckets(idx8.table) == "8")
+    graft.engine.CacheRegistry.evictAll()
+    val left = (idx8.postingTables ++ idx4.postingTables :+ idx8.statsTable)
+      .filter(spark.catalog.tableExists)
+    assert(left.isEmpty, s"evicted index tables survive: $left")
+  }
 }

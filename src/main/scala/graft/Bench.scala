@@ -1,129 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Benchmark main — one JSON line of per-query wall-clock over the
-  * SPARK_GRAFT_SF_DIR fixtures (driver contract; BASELINE.md).
-  *
-  * Each query executes its FULL plan into a noop sink (count() would let
-  * Catalyst prune projections and undercount the real work). One JVM/JIT
-  * warmup pass (flagship query) runs untimed first; r_catalog is
-  * excluded — it's a metadata query that analyzes every other query.
+/** Benchmark entry point: one JSON line of per-query wall-clock over
+  * the SPARK_GRAFT_SF_DIR fixtures, then the `total_tail` line
+  * (BASELINE.md). See the `bench` mode of [[Harness]].
   */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // managed tables (the persisted dedup index) live under tmp, not cwd
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // one consumption scope per execution: memo values stay pinned
-    // from build through the noop sink's action
-    def runFull(name: String): Unit = graft.engine.CacheRegistry.scoped {
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-    }
-
-    runFull("r_inner_join") // warmup: JIT + parquet footer caches
-
-    // Host-calibration probe: a FIXED-COST in-memory job (hash + sort
-    // 8M longs, no I/O, no data dependency) timed min-of-3. Its
-    // wall-clock depends only on the host, so total/calibration-ratio
-    // separates engine regressions from neighbor contention — the
-    // recorded calm-host probe value lives in BASELINE.md and
-    // inflation is a measured ratio, not an inference from totals.
-    def calibrate(): Double = (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(0L, 8000000L, 1L, cpus.toInt)
-        .selectExpr("xxhash64(id) AS h").orderBy("h")
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }.min
-    val calPre = calibrate()
-
-    // optional arg: comma-separated query-name filter (dev loop only —
-    // the driver always runs the full set with no args)
-    val only = args.headOption.map(_.split(',').toSet)
-    val names = SparkEntry.queries.keySet.toSeq.sorted
-      .filterNot(_ == "r_catalog")
-      .filter(n => only.forall(_.contains(n)))
-    // One untimed warmup pass per query (plan compilation, codegen,
-    // offline index/closure builds), then three timed passes run
-    // INTERLEAVED (pass-major order). The host shows sustained
-    // external contention windows: back-to-back passes of one query
-    // can all land inside a bad window (r2 measured the same binary
-    // 2.2x slower than r1), while interleaving spreads each query's
-    // passes across the whole run so min-of-3 measures the engine,
-    // not the neighbor.
-    names.foreach { name =>
-      try runFull(name)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] warmup $name failed: ${e.getMessage}")
-      }
-    }
-    val best = scala.collection.mutable.Map.empty[String, Double]
-    for (pass <- 1 to 3; name <- names) {
-      val t0 = System.nanoTime()
-      try runFull(name)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      val s = (System.nanoTime() - t0) / 1e9
-      best(name) = math.min(best.getOrElse(name, Double.MaxValue), s)
-    }
-    val results = names.map { name =>
-      System.err.println(f"[bench] $name%-24s ${best(name)}%8.2f s")
-      name -> best(name)
-    }
-    // Per-query map ordered slowest-first: the informative (expensive)
-    // rows lead the line, so a capture that keeps only a prefix still
-    // carries them.
-    val qs = results.sortBy(-_._2).map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    // probe again after the run: a contention window DURING the suite
-    // shows up as max(calPre, calPost) even if the start was calm
-    val calPost = calibrate()
-    val cal = f"""{"pre":$calPre%.3f,"post":$calPost%.3f}"""
-    System.err.println(f"[bench] calibration pre=$calPre%.3f s post=$calPost%.3f s")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","calibration":$cal,"queries":$qs,"sf":"$sfDir"}""")
-    // The full line above is ~8 KB at 251 queries; a tail-limited capture
-    // (last ~2000 chars) loses its leading "metric"/"value" keys. The
-    // FINAL line must therefore be a complete, parseable record on its
-    // own — and (r16 verdict) it must carry PER-QUERY timings, or the
-    // driver's per-query regression/scaling channels go blind. Emit the
-    // slowest queries at 3 decimals, greedily packed slowest-first so
-    // the whole line stays under ~1900 chars, with the rest of the
-    // suite summed in "rest_total" (value == sum(queries)+rest_total up
-    // to the 3-decimal rounding). Distinct metric name ("total_tail",
-    // same value fields) so a consumer collecting every metric=="total"
-    // record doesn't double-count the run; contract noted in BASELINE.md.
-    val slowFirst = results.sortBy(-_._2)
-    val entryBudget = 1700 // leaves ~200 chars for the fixed fields
-    val packed = new StringBuilder
-    var used = 0
-    var nPacked = 0
-    var coveredSec = 0.0
-    var full = false
-    slowFirst.foreach { case (k, v) =>
-      val e = "\"" + k + "\":" + f"$v%.3f"
-      if (!full && used + e.length + 1 <= entryBudget) {
-        if (nPacked > 0) packed.append(',')
-        packed.append(e); used += e.length + 1; nPacked += 1
-        coveredSec += v
-      } else full = true
-    }
-    val restTotal = f"${total - coveredSec}%.3f"
-    println(s"""{"metric":"total_tail","value":$total,"unit":"sec","calibration":$cal,"queries":{${packed.result()}},"rest_total":$restTotal,"sf":"$sfDir","n_queries":${results.size}}""")
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit = Harness.main("bench" +: args)
 }

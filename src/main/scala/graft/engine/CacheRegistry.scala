@@ -88,7 +88,7 @@ object CacheRegistry {
     * (e_dedup_incr_minhash 9.55 s/pass vs 0.09 s warm, ~60 s of the
     * 253 s total). One full pass of every query (r_catalog aside)
     * leaves 40 entries at sf0.01, and a two-dataset pass (the
-    * ScaleSweep shape) leaves 80, so the default is 128.
+    * two-scale sweep shape) leaves 80, so the default is 128.
     */
   def maxResident: Int =
     sys.props.get("graft.cache.maxResident").map(_.toInt).getOrElse(128)

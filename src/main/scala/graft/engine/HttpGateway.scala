@@ -36,6 +36,7 @@ import org.apache.spark.sql.SparkSession
 final class HttpGateway private (server: HttpServer,
     pool: java.util.concurrent.ExecutorService, ns: Namespaces,
     spark: SparkSession, dir: String) {
+  import HttpGateway.jsonStr
 
   def port: Int = server.getAddress.getPort
   def baseUrl: String = s"http://127.0.0.1:$port"
@@ -48,17 +49,6 @@ final class HttpGateway private (server: HttpServer,
     val os = ex.getResponseBody
     try { if (bytes.nonEmpty) os.write(bytes) } finally os.close()
   }
-
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   private def queryParams(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&").iterator
@@ -191,6 +181,21 @@ object HttpGateway {
     * unbounded result on the gateway process.
     */
   val MaxResultRows: Int = 1000
+
+  /** A JSON string literal: backslash, quote and EVERY control char
+    * (< 0x20) escaped — a raw tab or CR in a string makes a strict
+    * parser (Python's `json.load`) reject the whole document.
+    */
+  private[graft] def jsonStr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
 
   /** Bind 127.0.0.1 on an ephemeral port and serve `ns` over HTTP. */
   def start(ns: Namespaces, spark: SparkSession, dir: String): HttpGateway = {

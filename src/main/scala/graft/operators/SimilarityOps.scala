@@ -1356,12 +1356,10 @@ object SimilarityOps {
   // at nprobe=4 is 0.9 and flat full-corpus ADC equals the shipped
   // IVFADC number, while exact-L2 ranking ≡ exact-cosine ranking
   // (1.0) — on iid random vectors neighbor gaps concentrate below
-  // the quantization error, which no codebook size resolves. The
-  // GRAFT_PQ_K override exists ONLY to measure the recall-vs-k curve
-  // (engine and oracle both derive from it, so the replay stays
-  // exact at any k); gate/oracle runs use the default.
-  private[graft] val PqK: Int =
-    sys.env.get("GRAFT_PQ_K").map(_.toInt).getOrElse(256)
+  // the quantization error, which no codebook size resolves. Engine
+  // and oracle both derive from this constant, so the replay stays
+  // exact at any k (SURVEY §6 recorded k*=16/64/256).
+  private[graft] val PqK: Int = 256
   private val PqSubDim = 8 // = dim / PqM
 
   /** Training-sample cap for codebook Lloyd rounds: train on vectors

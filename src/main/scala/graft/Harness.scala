@@ -436,6 +436,7 @@ object Harness {
   private def aqeSkewSplit(spark: SparkSession, dir: String): Boolean = {
     val conf = spark.conf
     val saved = Seq(
+      "spark.sql.shuffle.partitions",
       "spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
@@ -443,6 +444,9 @@ object Harness {
       "spark.sql.files.maxPartitionBytes")
       .map(k => k -> conf.getOption(k)).toMap
     try {
+      // the thresholds below assume 32 shuffle partitions: at one per
+      // core (4 on a small host) the hot partition does not stand out
+      conf.set("spark.sql.shuffle.partitions", "32")
       conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "4m")
       // hot partition ≈ 4x the median at 32 shuffle partitions — the
@@ -592,20 +596,25 @@ object Harness {
     val spark = session(cpus(DefaultCpus))
     val docs = Tables.load(spark, dir, "documents")
 
-    def run(mode: String, b: Int): (Double, Seq[Long]) = {
+    def run(mode: String, b: Int, m: Int = merges): (Double, Seq[Long]) = {
       val times = scala.collection.mutable.ArrayBuffer.empty[Long]
       val (r, total) = timed {
-        graft.operators.CorpusOps.bpeMergeLoopBatched(docs, merges, b,
+        graft.operators.CorpusOps.bpeMergeLoopBatched(docs, m, b,
           (round, n, ms) => {
             times += ms
-            println(s"""{"mode":"$mode","round":$round,"n_merges":$n,"ms":$ms}""")
+            if (mode.nonEmpty)
+              println(s"""{"mode":"$mode","round":$round,"n_merges":$n,"ms":$ms}""")
           })
       }
-      require(r.vocab.size == merges, s"$mode stopped at ${r.vocab.size}")
-      r.seqs.unpersist()
+      require(r.vocab.size == m, s"$mode stopped at ${r.vocab.size}")
+      CacheRegistry.freeFrame(r.seqs) // both are the loop's checkpoints
+      CacheRegistry.freeFrame(r.counts)
       (total, times.toSeq)
     }
 
+    // untimed, unprinted warm-up: the sequential run goes first and
+    // would alone pay the JIT, footer and first-read costs
+    run("", 1, 2)
     val (seqTotal, seqTimes) = run("seq", 1)
     val (batTotal, batTimes) = run(s"b$batch", batch)
     def avg(xs: Seq[Long]): Double =

@@ -17,10 +17,4 @@ import org.apache.spark.sql.types.DecimalType
 object Num {
   /** Exact sum of a ≤2-decimal double column, returned as double. */
   def dsum(c: Column): Column = sum(c.cast(DecimalType(18, 2))).cast("double")
-
-  /** Exact sum for arbitrary doubles: quantize to 6 decimals first. */
-  def dsum6(c: Column): Column = sum(c.cast(DecimalType(18, 6))).cast("double")
-
-  /** Deterministic 2-dp average: exact decimal sum / exact count. */
-  def davg(c: Column): Column = round(dsum(c) / count(c), 2)
 }

@@ -1,6 +1,10 @@
 package graft.engine
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
 /** The engine's one memo mechanism: a session-lifetime LRU of
   * build-once artifacts — the marathon-session memory discipline.
@@ -9,61 +13,62 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * label table, the IVF assignment, BPE merges, on-disk indexes and
   * publish roots, trained weights, the plan audit) so bench warm
   * passes, r_catalog's schema walk and composed pipelines pay each
-  * build once. An UNBOUNDED memo is a scale-killer: the r14 768 MB
-  * spill rehearsal saw `e_dedup_simhash_md5` die with
-  * UNABLE_TO_ACQUIRE_MEMORY after 243 prior queries' pinned blocks had
-  * accumulated, while it passed solo at the same cap. So every memo in
-  * `src/main` routes through here, and the registry owns the KEYING
-  * RULE: site name, Spark application id, then every build parameter
-  * the caller passes (dataset dir, nlist, buckets, plan hash, …).
+  * build once. An UNBOUNDED memo is a scale-killer (the r14 768 MB
+  * spill rehearsal: `e_dedup_simhash_md5` died with
+  * UNABLE_TO_ACQUIRE_MEMORY under 243 prior queries' pinned blocks),
+  * so every memo in `src/main` routes through here. The KEYING RULE:
+  * site name, Spark application id, then every build parameter.
   *
   *  - `memo(site, params*)(build)(free)` returns the cached value or
-  *    builds (and registers) it. Each hit refreshes recency.
-  *  - Eviction accounting is BYTES-FIRST (r16): an entry records the
-  *    persistent-RDD ids its build pinned (the `sc.getPersistentRDDs`
-  *    delta around the build, minus ids another resident entry already
-  *    recorded — a nested build such as sim.split → sim.ivf is charged
-  *    once) and its live footprint is read from `sc.getRDDStorageInfo`
-  *    (memSize + diskSize) at each check. LRU victims are evicted while
-  *    the total exceeds `maxResidentBytes` (`-Dgraft.cache.maxResidentBytes`,
-  *    default maxMemory/4) — skipping byte-free entries, whose eviction
-  *    would free nothing — OR while the entry COUNT exceeds
-  *    `maxResident` (`-Dgraft.cache.maxResident`). Eviction runs the
-  *    entry's `free` and drops it, so the next request REBUILDS it to
-  *    the identical answer (every build is deterministic by the oracle
-  *    contract; CacheRegistrySpec pins this per memo site).
-  *  - `evictAll()` is the explicit phase boundary (and a true cold
-  *    reset: nothing memoized survives it).
+  *    builds and registers it; a hit refreshes recency.
+  *  - `frame(site, params*)(build)` memoizes ONE DataFrame. Composite
+  *    values (IVF index, structured lane, BPE result) stay on `memo`
+  *    and store each frame with [[materialize]].
+  *  - ONE STORAGE POLICY: [[materialize]] stores a frame as an eager
+  *    `localCheckpoint`; a bare checkpoint the build made itself is
+  *    kept as is, so nothing is stored twice. The storage the build
+  *    made for its own use (a loop's last round, a persisted level) is
+  *    released once the frame is stored — never storage a resident
+  *    entry records (the dangling walk reads the link edges, the split
+  *    reads the IVF assignment). Every materialized frame is freed
+  *    with [[freeFrame]] when its entry leaves; `free` handles the
+  *    rest (directories, tables).
+  *  - BYTES-FIRST accounting: an entry records the persistent RDDs its
+  *    build made (the `sc.getPersistentRDDs` delta, minus ids another
+  *    resident entry recorded — a nested build is charged once), and
+  *    its footprint is read from `sc.getRDDStorageInfo`. LRU victims
+  *    are evicted while the total exceeds `maxResidentBytes` (skipping
+  *    byte-free entries, whose eviction frees nothing) or the entry
+  *    count exceeds `maxResident`. A later request REBUILDS an evicted
+  *    entry to the identical answer (builds are deterministic by the
+  *    oracle contract; CacheRegistrySpec pins this per site).
+  *  - STALE ENTRIES REBUILD: checkpoint blocks are the data's only
+  *    copy. On a hit, if a frame the entry stored in full is missing
+  *    partitions in `sc.getRDDStorageInfo` (a lost executor or block),
+  *    the entry is dropped, freed and rebuilt under the same key.
+  *  - `evictAll()` is the explicit phase boundary and a true cold reset.
   *
-  * On-disk artifacts (publish roots, persisted indexes, managed tables)
-  * follow one contract: the build is IDEMPOTENT — it writes into a
-  * fresh [[memoDir]] directory and drops the tables and epoch markers
-  * it is about to create ([[graft.sources.Bucketing.dropManaged]]), so
-  * a rebuild never meets a previous build's replay guard; `free`
-  * deletes what the build made; and a caller that reads the artifact
-  * LAZILY holds it inside `scoped`, or another memo call may evict it.
+  * On-disk artifacts are built IDEMPOTENTLY into a fresh [[memoDir]]
+  * directory, after dropping the tables and epoch markers the build
+  * creates ([[graft.sources.Bucketing.dropManaged]]); `free` deletes
+  * them. A caller that reads one LAZILY holds it inside `scoped`.
   *
-  * CONCURRENT callers (the HttpGateway pool; r16):
-  *
-  *  - Builds run OUTSIDE the registry monitor: `memo` installs a
-  *    per-key latch, runs the build, then re-enters to publish. A
-  *    caller of the SAME key awaits the latch; callers of OTHER keys
-  *    proceed (no head-of-line blocking). A build that throws removes
-  *    its latch so a waiter retries. Nested memo calls during a build
-  *    (split→IVF, lshCc→staged, plan audit→audited queries) target
-  *    different keys and compose freely.
-  *  - Values are PINNED while consumed: inside `scoped { … }` every memo
-  *    hit or build pins its entry until the scope closes (query end),
-  *    and eviction skips pinned entries — another thread can never free
-  *    a frame, a checkpoint block or a directory under an in-flight
-  *    query. The driver mains, perfbench and the gateway scope each
-  *    query; an unscoped call (sequential spec code) is unpinned.
+  * CONCURRENT callers (the HttpGateway pool): builds run OUTSIDE the
+  * registry monitor behind a per-key latch — a caller of the same key
+  * waits, other keys proceed, a failed build lets a waiter retry, and
+  * nested memo calls compose. Inside `scoped { … }` every value a
+  * thread obtains PINS its ENTRY until the scope closes (query end);
+  * eviction skips pinned entries. A stale entry that is still pinned
+  * leaves the map at once and is freed when its last pin releases;
+  * releasing it never touches its replacement's pins. Unscoped calls
+  * (sequential spec code) are unpinned.
   */
 object CacheRegistry {
 
-  private final class Entry(val value: AnyRef, val free: () => Unit,
-      val rddIds: Set[Int]) {
+  private final class Entry(val key: String, val value: AnyRef,
+      val free: () => Unit, val rddIds: Set[Int], val stored: Set[Int]) {
     var pins: Int = 0
+    var dropped = false // left the map while pinned: freed at its last unpin
   }
 
   // access-order LinkedHashMap = LRU order maintained on get()
@@ -106,7 +111,7 @@ object CacheRegistry {
 
   // ---- consumption pins -------------------------------------------
 
-  private val pinScope = new ThreadLocal[java.util.ArrayList[String]]()
+  private val pinScope = new ThreadLocal[java.util.ArrayList[Entry]]()
 
   /** Open a consumption scope: every memo value obtained on this
     * thread inside `body` stays pinned (never evicted) until `body`
@@ -115,15 +120,15 @@ object CacheRegistry {
     */
   def scoped[T](body: => T): T = {
     val outer = pinScope.get()
-    val mine = new java.util.ArrayList[String]()
+    val mine = new java.util.ArrayList[Entry]()
     pinScope.set(mine)
     try body
     finally {
       pinScope.set(outer)
       synchronized {
-        mine.forEach { k =>
-          val e = entries.get(k)
-          if (e != null && e.pins > 0) e.pins -= 1
+        mine.forEach { e =>
+          if (e.pins > 0) e.pins -= 1
+          if (e.pins == 0 && e.dropped) runFree(e)
         }
         // pins released — re-enforce the budget now
         evictOverBudget()
@@ -131,20 +136,23 @@ object CacheRegistry {
     }
   }
 
-  private def pinLocked(k: String, e: Entry): Unit = {
+  private def pinLocked(e: Entry): Unit = {
     val scope = pinScope.get()
-    if (scope != null) { e.pins += 1; scope.add(k) }
+    if (scope != null) { e.pins += 1; scope.add(e) }
   }
 
   // ---- the memo ----------------------------------------------------
 
+  // a running build: the RDDs persisted before it, the frames it stored
+  private final class Build(val before: Set[Int]) {
+    val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+  }
+  private val currentBuild = new ThreadLocal[Build]() // innermost on this thread
+
   /** The memo: cached value for (site, params), else build + register.
-    * The key is the site, the application id and every build parameter
-    * — pass each value the build reads besides the dataset files.
-    * `free` must release everything the value holds (persisted frames,
-    * checkpoint RDDs, directories, managed tables); it runs at
-    * eviction, outside any consumption pin, and must not throw
-    * (wrapped defensively).
+    * Pass every value the build reads besides the dataset files. `free`
+    * releases what the value holds besides its materialized frames; it
+    * runs at eviction, outside any pin (wrapped: it must not throw).
     */
   def memo[T <: AnyRef](site: String, params: Any*)(build: => T)(
       free: T => Unit): T = {
@@ -154,7 +162,12 @@ object CacheRegistry {
       var mine = false
       synchronized {
         val hit = entries.get(k) // refreshes LRU recency
-        if (hit != null) { pinLocked(k, hit); return hit.value.asInstanceOf[T] }
+        if (hit != null) {
+          if (!isStale(hit)) { pinLocked(hit); return hit.value.asInstanceOf[T] }
+          // blocks lost: drop it (freed now or at its last unpin), rebuild
+          entries.remove(k)
+          if (hit.pins == 0) runFree(hit) else hit.dropped = true
+        }
         latch = building.get(k)
         if (latch == null) {
           latch = new java.util.concurrent.CountDownLatch(1)
@@ -164,32 +177,65 @@ object CacheRegistry {
       }
       if (!mine) { latch.await(); /* published or failed — retry */ }
       else {
-        val before = persistentIds()
-        var ok = false
+        val b = new Build(persistentIds())
+        val outer = currentBuild.get()
         try {
-          val v = build
-          val made = persistentIds() -- before
+          currentBuild.set(b)
+          val v = try build finally currentBuild.set(outer)
+          val frames = b.frames.toList
+          val stored = settled(frames)
           synchronized {
             // a nested build's RDDs belong to the nested entry
-            var pinned = made
-            entries.values().forEach(e => pinned --= e.rddIds)
-            val e = new Entry(v, () => free(v), pinned)
+            val ids = persistentIds() -- b.before -- recordedIds()
+            val e = new Entry(k, v, () => { frames.foreach(freeFrame); free(v) },
+              ids, stored)
             entries.put(k, e)
-            pinLocked(k, e)
+            pinLocked(e)
             // evict AFTER inserting: the fresh entry is MRU (and
             // possibly pinned), never the first victim
             evictOverBudget()
           }
-          ok = true
           return v
         } finally {
+          // after a failed build a waiter retries and becomes the builder
           synchronized { building.remove(k) }
           latch.countDown()
-          if (!ok) () // waiter retries and becomes the builder
         }
       }
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** The memo of one DataFrame, stored by [[materialize]]. */
+  def frame(site: String, params: Any*)(build: => DataFrame): DataFrame =
+    memo(site, params: _*)(materialize(build))(_ => ())
+
+  /** The one storage policy for a memoized frame: an eager
+    * `localCheckpoint`, unless `df` is a bare checkpoint its own build
+    * made. Then the storage the build made that `df` reads (checkpoints
+    * under its plan, `df`'s own persist) is released, unless a resident
+    * entry records it. Inside a [[memo]] build the frame is freed with
+    * its entry.
+    */
+  def materialize(df: DataFrame): DataFrame = {
+    val b = Option(currentBuild.get())
+    val recorded = synchronized(recordedIds())
+    def ours(rdd: org.apache.spark.rdd.RDD[_]): Boolean = rdd.getStorageLevel.isValid &&
+      b.exists(!_.before(rdd.id)) && !recorded(rdd.id)
+    val out = df.queryExecution.analyzed match {
+      case lr: LogicalRDD if ours(lr.rdd) => df
+      case _ =>
+        val cp = df.localCheckpoint(true)
+        checkpoints(df).filter(ours).foreach(_.unpersist(false))
+        df.queryExecution.withCachedData match {
+          case imr: InMemoryRelation if imr.cacheBuilder.isCachedColumnBuffersLoaded &&
+              ours(imr.cacheBuilder.cachedColumnBuffers) => df.unpersist(false)
+          case _ =>
+        }
+        cp
+    }
+    b.foreach(_.frames += out)
+    out
   }
 
   /** The on-disk memo: `build` writes into a fresh temp directory and
@@ -236,26 +282,45 @@ object CacheRegistry {
     session.map(_.sparkContext.getPersistentRDDs.keySet.toSet)
       .getOrElse(Set.empty)
 
-  /** Live pinned bytes of an entry: its recorded RDD ids' current
-    * memSize + diskSize from the storage status — measured, not
-    * estimated, so disk-spilled or already-released blocks count as
-    * what they are.
+  /** Live bytes of an entry: its RDDs' current memSize + diskSize in
+    * the storage status — measured, so spilled or released blocks count
+    * as what they are.
     */
-  private def entryBytes(e: Entry,
-      info: Map[Int, Long]): Long =
+  private def entryBytes(e: Entry, info: Map[Int, Long]): Long =
     e.rddIds.iterator.map(id => info.getOrElse(id, 0L)).sum
 
+  private def storageInfo() =
+    session.map(_.sparkContext.getRDDStorageInfo).getOrElse(Array.empty)
+
   private def storageBytesById(): Map[Int, Long] =
-    session.map(_.sparkContext.getRDDStorageInfo
-        .map(i => i.id -> (i.memSize + i.diskSize)).toMap)
-      .getOrElse(Map.empty)
+    storageInfo().map(i => i.id -> (i.memSize + i.diskSize)).toMap
+
+  // of `ids`, the RDDs whose every partition is stored right now
+  private def fullyStored(ids: Set[Int]): Set[Int] = storageInfo()
+    .collect { case i if ids(i.id) && i.numCachedPartitions >= i.numPartitions => i.id }.toSet
+
+  // lost blocks: a stored frame's checkpoint (no lineage to recompute
+  // from) is no longer stored in full
+  private def isStale(e: Entry): Boolean =
+    e.stored.nonEmpty && fullyStored(e.stored) != e.stored
+
+  // the checkpoints of the frames still stored, once the storage status
+  // shows them in full: its listener may trail the eager checkpoint
+  private def settled(frames: Seq[DataFrame]): Set[Int] = {
+    val ids = frames.flatMap(checkpoints).filter(_.getStorageLevel.isValid).map(_.id).toSet
+    val deadline = System.nanoTime() + 2000000000L
+    while (fullyStored(ids) != ids && System.nanoTime() < deadline) Thread.sleep(5)
+    fullyStored(ids)
+  }
+
+  // must hold the monitor: the RDDs resident entries record
+  private def recordedIds(): Set[Int] =
+    entries.values().asScala.flatMap(_.rddIds).toSet
 
   /** Total measured bytes currently pinned by resident entries. */
   def residentBytes: Long = synchronized {
     val info = storageBytesById()
-    var total = 0L
-    entries.values().forEach(e => total += entryBytes(e, info))
-    total
+    entries.values().stream().mapToLong(entryBytes(_, info)).sum()
   }
 
   // must hold the monitor
@@ -263,9 +328,7 @@ object CacheRegistry {
     val capN = maxResident
     val capB = maxResidentBytes
     var info = storageBytesById()
-    def totalBytes: Long = {
-      var t = 0L; entries.values().forEach(e => t += entryBytes(e, info)); t
-    }
+    def totalBytes = entries.values().stream().mapToLong(entryBytes(_, info)).sum()
     var progress = true
     while (progress) {
       // over the count cap any unpinned entry will do; over the byte
@@ -281,7 +344,7 @@ object CacheRegistry {
               (overCount || entryBytes(cand.getValue, info) > 0L)) {
             it.remove()
             evicted.incrementAndGet()
-            runFree(cand.getKey, cand.getValue)
+            runFree(cand.getValue)
             info = storageBytesById()
             progress = true
           }
@@ -294,37 +357,27 @@ object CacheRegistry {
     * ignored here: the caller asserts no consumer is in flight.
     */
   def evictAll(): Unit = synchronized {
-    val it = entries.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      it.remove()
-      runFree(e.getKey, e.getValue)
-    }
+    entries.values().forEach(runFree(_))
+    entries.clear()
   }
 
-  private def runFree(key: String, e: Entry): Unit =
+  private def runFree(e: Entry): Unit =
     try e.free()
     catch {
       case t: Throwable =>
         // a dead SparkSession at JVM teardown must not poison the
         // registry; blocks die with the app anyway
-        System.err.println(s"[cache-registry] free($key) failed: $t")
+        System.err.println(s"[cache-registry] free(${e.key}) failed: $t")
     }
 
-  /** Release every Spark storage handle a cached FRAME pins: the
-    * CacheManager entry (persisted frames; exact-plan match, no
-    * cascade) and any checkpoint RDD the plan roots at (eager
-    * localCheckpoint output — LogicalRDD leaves). After this the
-    * frame object must not be used: checkpoint blocks are the data's
-    * only copy, which is exactly why eviction removes the memo entry
-    * before any caller can reach the freed frame.
+  /** Release the checkpoints a FRAME reads (its LogicalRDD leaves) —
+    * every stored frame is one. The frame must not be used after:
+    * checkpoint blocks are the data's only copy, which is why eviction
+    * removes the memo entry before any caller can reach the freed frame.
     */
-  def freeFrame(df: DataFrame): Unit = {
-    df.unpersist(blocking = false)
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-  }
+  def freeFrame(df: DataFrame): Unit =
+    checkpoints(df).foreach(_.unpersist(blocking = false))
+
+  private def checkpoints(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }
 }

@@ -2,10 +2,8 @@ package graft.engine
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, SparkSession}
-
-import graft.Tables
 
 /** Declarative catalog boot — the reference's startup path: a
   * `config.json` whose `databases[]` each carry a `queries{}` map of

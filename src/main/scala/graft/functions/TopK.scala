@@ -2,7 +2,7 @@ package graft.functions
 
 import scala.collection.immutable.ArraySeq
 
-import org.apache.spark.sql.{Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Scored row for per-key top-k: ordered by (score DESC, id ASC). */

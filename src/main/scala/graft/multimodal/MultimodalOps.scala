@@ -345,15 +345,14 @@ object MultimodalOps {
     * pass map-side, 16 bytes of fingerprint per image into one
     * band-keyed shuffle — the image analog of text MinHash dedup.
     */
-  // persist-once (the DedupOps.persistOnce contract): the dHash frame
-  // feeds five plan branches and every bench pass — one pinned copy
+  // stage-once (the DedupOps.stageOnce contract): the dHash frame
+  // feeds five plan branches and every bench pass — one stored copy
   // per (app, dataset), not one per invocation; CacheRegistry-managed
   // so a marathon session eventually evicts and a later call rebuilds
   def imageDedup(spark: SparkSession, dir: String,
       maxHamming: Int = 3): DataFrame = {
-    val dh = graft.engine.CacheRegistry.memo("mm.dhash", dir)(
-      dHashAll(dedupPngTable(spark, dir)).toDF().persist())(
-      _.unpersist(blocking = false))
+    val dh = graft.engine.CacheRegistry.frame("mm.dhash", dir)(
+      dHashAll(dedupPngTable(spark, dir)).toDF())
     val withBands = dh.select(col("doc_id"),
       array((0 until 4).map { j =>
         struct(lit(j).as("band"),

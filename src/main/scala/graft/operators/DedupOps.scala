@@ -415,9 +415,9 @@ object DedupOps {
   // Driver-side two-day replay ⇒ constructing the frame runs Spark
   // jobs and index writes — memoize per (app, dataset), drop/recreate
   // the tables inside the build for idempotence (the dedupIncr DROP
-  // pattern, hoisted out of the per-pass path). CacheRegistry-managed:
-  // eviction frees the survivors' checkpoint blocks; a rebuild replays
-  // the two days onto freshly dropped tables, same answer.
+  // pattern, hoisted out of the per-pass path). A rebuild replays the
+  // two days onto freshly dropped tables, same answer. The sort stays
+  // in the query: a stored frame keeps rows, not a row order.
 
   /** Gate form: even doc_ids arrive as day 1, odd as day 2 (the
     * [[dedupIncr]] split). Day 2 must drop its within-batch near-dups
@@ -425,7 +425,7 @@ object DedupOps {
     * persisted index buckets.
     */
   private val dedupIncrMinhash: Q = (spark, dir) =>
-    graft.engine.CacheRegistry.memo("dedup.incrminhash", dir)({
+    graft.engine.CacheRegistry.frame("dedup.incrminhash", dir)({
         val h = Integer.toHexString(dir.hashCode)
         val bandsTbl = s"graft_lshidx_b_$h"
         val featsTbl = s"graft_lshidx_f_$h"
@@ -436,10 +436,8 @@ object DedupOps {
           docs.where(col("doc_id") % 2 === 0), bandsTbl, featsTbl)
         val s2 = minhashIncrementalDedup(
           docs.where(col("doc_id") % 2 === 1), bandsTbl, featsTbl)
-        s1.unionByName(s2)
-          .select("doc_id", "lang", "source", "n_chars")
-          .orderBy("doc_id")
-      })(graft.engine.CacheRegistry.freeFrame)
+        s1.unionByName(s2).select("doc_id", "lang", "source", "n_chars")
+      }).orderBy("doc_id")
 
   /** MinHash band keys via explode + hash-aggregate: k codegen'd MIN
     * columns over the exploded shingle hashes, instead of k interpreted
@@ -630,40 +628,29 @@ object DedupOps {
 
   // The CC label table is computed by a driver-side iterative loop, so
   // (unlike every other query) just CONSTRUCTING the DataFrame runs
-  // Spark jobs. Cache the result per (app, dataset): r_catalog's
-  // schema walk and the query's own execution then share one closure
-  // computation (the loop's output is localCheckpointed, so reuse is a
-  // cached-RDD scan). Staleness contract: the key assumes a dataset
-  // directory is immutable within an application (true for the
-  // fixtures and for any content-addressed lake layout); key by a
-  // dataset fingerprint (e.g. file mtimes) before pointing this at
-  // mutable paths. Lives in the CacheRegistry LRU, so a marathon
-  // session eventually evicts (checkpoint blocks released) and a
-  // later call rebuilds the identical table.
+  // Spark jobs. Memoize it per (app, dataset): r_catalog's schema walk
+  // and the query's own execution share one closure computation. The
+  // key assumes a dataset directory is immutable within an application
+  // (true for the fixtures and any content-addressed lake layout); key
+  // by a dataset fingerprint before pointing this at mutable paths.
 
-  /** Persist-once memo for the staged feature frames, keyed by the
+  /** Stage-once memo for the staged feature frames, keyed by the
     * frame's analyzed-plan semantic hash: repeated invocations of the
     * same dedup pipeline (bench warmup + interleaved passes, the scale
-    * rehearsal) reuse ONE pinned frame instead of stacking a fresh
-    * persisted RDD per call that nothing ever unpersists. Distinct
-    * inputs (different dir, different hash family) produce distinct
-    * plans, hence distinct keys. Same staleness contract as
-    * [[dedupCc]]'s memo: assumes input data is immutable for the life
-    * of the application. Routed through [[graft.engine.CacheRegistry]] (the
-    * marathon-session eviction discipline): an LRU-evicted frame is
-    * unpersisted AND forgotten, so a later reuse transparently
-    * rebuilds it to the identical answer.
+    * rehearsal) reuse ONE stored frame instead of re-deriving the
+    * shingle transform per call. Distinct inputs (different dir,
+    * different hash family) produce distinct plans, hence distinct
+    * keys. Same staleness contract as [[dedupCc]]'s memo: assumes input
+    * data is immutable for the life of the application.
     */
-  private def persistOnce(frame: DataFrame): DataFrame = {
-    graft.engine.CacheRegistry.memo("dedup.staged",
-      frame.queryExecution.analyzed.semanticHash())(frame.persist())(
-      _.unpersist(blocking = false))
-  }
+  private def stageOnce(staged: DataFrame): DataFrame =
+    graft.engine.CacheRegistry.frame("dedup.staged",
+      staged.queryExecution.analyzed.semanticHash())(staged)
 
   private val dedupCc: Q = (spark, dir) =>
-    graft.engine.CacheRegistry.memo("dedup.cc", dir)(
-      connectedMinLabels(ccChainPairs(Tables.load(spark, dir, "documents")))
-        .orderBy("id"))(graft.engine.CacheRegistry.freeFrame)
+    graft.engine.CacheRegistry.frame("dedup.cc", dir)(
+      connectedMinLabels(ccChainPairs(Tables.load(spark, dir, "documents"))))
+      .orderBy("id")
 
   /** Duplicate-cluster size distribution over the CC closure — the
     * dedup AUDIT view (how much of the corpus sits in how-large
@@ -683,11 +670,11 @@ object DedupOps {
   /** Staged md5-hashed 3-word-shingle feature sets — the oracle-
     * checkable feature family shared by [[minhashMd5Dedup]],
     * [[minhashRecall]], the CC-canonical dedup and the leak-free
-    * split (persistOnce keys by plan hash, so all of them pin ONE
+    * split (stageOnce keys by plan hash, so all of them pin ONE
     * copy).
     */
   private def md5ShingleFeats(docs: DataFrame): DataFrame =
-    persistOnce(docs
+    stageOnce(docs
       .select(col("doc_id"),
         graft.functions.Md5Shingles.md5WordShingles(col("text"), 3)
           .as("feat")))
@@ -703,7 +690,7 @@ object DedupOps {
     * (app, dataset) like [[dedupCc]].
     */
   private[graft] def lshCcLabels(spark: SparkSession, dir: String): DataFrame =
-    graft.engine.CacheRegistry.memo("dedup.lshcc", dir)({
+    graft.engine.CacheRegistry.frame("dedup.lshcc", dir)({
         val docs = Tables.load(spark, dir, "documents")
         val staged = md5ShingleFeats(docs)
         val pairs = verifiedPairs(staged,
@@ -712,7 +699,7 @@ object DedupOps {
         docs.select(col("doc_id").as("id"))
           .join(connectedMinLabels(pairs), Seq("id"), "left_outer")
           .select(col("id"), coalesce(col("label"), col("id")).as("label"))
-      })(graft.engine.CacheRegistry.freeFrame)
+      })
 
   /** CLUSTER-CANONICAL near-dup removal — the SlimPajama/Dolma policy:
     * close the LSH-verified pair set under connected components and
@@ -789,7 +776,7 @@ object DedupOps {
       bandPairs(sigBands(staged, 16, 7L, 4, 4), "doc_id"), threshold)
   }
 
-  private def minhashStaged(docs: DataFrame): DataFrame = persistOnce(docs
+  private def minhashStaged(docs: DataFrame): DataFrame = stageOnce(docs
     .select(col("doc_id"), TS.tokenHashes(col("text")).as("_th"))
     .select(col("doc_id"),
       array_distinct(TS.shingleHashesFrom(col("_th"), 3)).as("feat")))
@@ -943,7 +930,7 @@ object DedupOps {
       hashOne: Column => Column = tok => xxhash64(tok)): DataFrame = {
     // (doc_id, simhash) is 16 bytes/doc — persist so the band explode,
     // both pair sides, and the final anti join share one computation
-    val docs = docsIn.join(persistOnce(simhashAgg(docsIn, hashOne)), "doc_id")
+    val docs = docsIn.join(stageOnce(simhashAgg(docsIn, hashOne)), "doc_id")
     val withBands = docs.select(col("doc_id"),
       array((0 until 4).map { j =>
         struct(lit(j).as("band"),
@@ -986,7 +973,7 @@ object DedupOps {
     */
   def ngramDedup(docs: DataFrame, threshold: Double = 0.9): DataFrame = {
     // Same staged-and-persisted layout as minhashDedup (see comment there).
-    val staged = persistOnce(docs
+    val staged = stageOnce(docs
       .select(col("doc_id"),
         array_distinct(TS.hashed(TS.charGrams(col("text"), 5))).as("feat")))
     survivors(docs, staged,
@@ -1002,7 +989,7 @@ object DedupOps {
     * md5-derived gram hashes (see [[minhashMd5Dedup]] for the pattern).
     */
   def ngramMd5Dedup(docs: DataFrame, threshold: Double = 0.9): DataFrame = {
-    val staged = persistOnce(docs
+    val staged = stageOnce(docs
       .select(col("doc_id"),
         graft.functions.Md5Shingles.md5HashArray(
           TS.charGrams(col("text"), 5)).as("feat")))

@@ -340,19 +340,15 @@ object DomainOps {
     * EVERY pass), and Catalyst re-derives the whole synthesize→
     * extract→resolve chain per reference (r17 before-plan:
     * e_pipeline_frontier carried 26 parquet scans). The edge list
-    * itself is tiny (≈2.5 rows/page of two longs), so one eager
-    * localCheckpoint buys every later reference at in-memory cost —
-    * the splitCells/IVF-index discipline, CacheRegistry-managed
-    * (eviction frees the blocks; a rebuild re-extracts
-    * deterministically). e_link_extract does NOT ride this memo: its
+    * itself is tiny (≈2.5 rows/page of two longs), so one stored frame
+    * buys every later reference at in-memory cost (a rebuild
+    * re-extracts deterministically). e_link_extract does NOT ride this memo: its
     * declared output carries link_url and its pinned plan shape is
     * the extraction chain itself.
     */
   private[graft] def linkEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.engine.CacheRegistry.memo("domain.linkEdges", dir)({
-        linkEdgesWithUrl(spark, dir).select("src_doc", "dst_doc")
-          .localCheckpoint(true)
-      })(graft.engine.CacheRegistry.freeFrame)
+    graft.engine.CacheRegistry.frame("domain.linkEdges", dir)(
+      linkEdgesWithUrl(spark, dir).select("src_doc", "dst_doc"))
 
   // ---------------------------------------------------------------
   // robots.txt politeness filtering (RFC 9309)

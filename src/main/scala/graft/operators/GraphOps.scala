@@ -121,14 +121,11 @@ object GraphOps {
     * distinct) is the expensive half of both queries and was re-run
     * per reference: every e_triangles pass re-derived it into a fresh
     * localCheckpoint, and e_pagerank's cold deg/dir persists derived
-    * it twice. One eager checkpoint (edge rows are two longs) serves
-    * them all; CacheRegistry-managed like domain.linkEdges.
+    * it twice. One stored frame (edge rows are two longs) serves them.
     */
   private def coEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.engine.CacheRegistry.memo("graph.coEdges", dir)({
-        coPurchaseEdges(Tables.load(spark, dir, "lineitem"))
-          .localCheckpoint(true)
-      })(graft.engine.CacheRegistry.freeFrame)
+    graft.engine.CacheRegistry.frame("graph.coEdges", dir)(
+      coPurchaseEdges(Tables.load(spark, dir, "lineitem")))
 
   private val trianglesQ: Q = (spark, dir) =>
     triangleStatsOn(coEdges(spark, dir))
@@ -373,9 +370,9 @@ object GraphOps {
     * offline batch artifact exactly like the CC label table
     * (dedup.cc), the LSH component labels (dedup.lshcc) and the GD
     * weight trajectory (quality model): iterative, deterministic,
-    * node-sized — so it is memoized the same way and eviction frees
-    * the checkpoint (a rebuild re-walks to the identical 12-dp
-    * iterates). Only the frontier COMPOSITION rides the memo:
+    * node-sized — so it is memoized the same way (a rebuild re-walks
+    * to the identical 12-dp iterates). Only the frontier COMPOSITION
+    * rides the memo:
     * e_pagerank_dangling keeps declaring (and its plan-audit row keeps
     * pinning) the walk itself, so the walk's physical shape stays a
     * gated fact and its bench row keeps measuring the real iteration
@@ -385,12 +382,10 @@ object GraphOps {
     * label table.
     */
   private[graft] def danglingWalk(spark: SparkSession, dir: String): DataFrame =
-    graft.engine.CacheRegistry.memo("graph.danglingWalk", dir)({
-        pageRankDangling(DomainOps.linkEdges(spark, dir)
-          .where(pmod(col("src_doc"), lit(3L)) =!= 0)
-          .select(col("src_doc").as("src"), col("dst_doc").as("dst")))
-          .localCheckpoint(true)
-      })(graft.engine.CacheRegistry.freeFrame)
+    graft.engine.CacheRegistry.frame("graph.danglingWalk", dir)(
+      pageRankDangling(DomainOps.linkEdges(spark, dir)
+        .where(pmod(col("src_doc"), lit(3L)) =!= 0)
+        .select(col("src_doc").as("src"), col("dst_doc").as("dst"))))
 
   private val pageRankDanglingQ: Q = (spark, dir) =>
     pageRankDangling(DomainOps.linkEdges(spark, dir)

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.{TextShingles => TS}
 
 /** EXACT set-similarity self-join (Jaccard ≥ τ over word-shingle sets)
   * via AllPairs/PPJoin prefix filtering (Bayardo/Ma/Srikant WWW 2007;
@@ -102,13 +101,12 @@ object SetJoinOps {
   /** The feature table feeds THREE plan branches (df counting and both
     * verify sides); without a cache boundary Catalyst re-evaluates the
     * interpreted HOF shingle transform per branch (BASELINE.md's trap
-    * list; measured 14.6 s → ~1 s at sf0.1). One persisted frame per
+    * list; measured 14.6 s → ~1 s at sf0.1). One stored frame per
     * (session, dir), the same memo pattern as DedupOps' staged feats.
     */
   private[operators] def stagedFeats(spark: SparkSession, dir: String): DataFrame =
-    graft.engine.CacheRegistry.memo("setjoin.staged", dir)(
-      shingleFeats(Tables.load(spark, dir, "documents")).persist())(
-      _.unpersist(blocking = false))
+    graft.engine.CacheRegistry.frame("setjoin.staged", dir)(
+      shingleFeats(Tables.load(spark, dir, "documents")))
 
   private val jaccardJoinQ: Q = (spark, dir) =>
     jaccardJoin(stagedFeats(spark, dir))

@@ -287,20 +287,17 @@ object SimilarityOps {
     * Staleness contract: assumes the dataset directory is immutable
     * within an application (true for the fixtures); key by a dataset
     * fingerprint before pointing this at mutable paths.
-    * CacheRegistry-managed: LRU eviction unpersists the assignment
-    * table; a later probe rebuilds the identical index (deterministic
-    * k-means seeds/rounds).
+    * After eviction a probe rebuilds the identical index
+    * (deterministic k-means seeds/rounds).
     */
   def buildIvfIndex(spark: SparkSession, dir: String, nlist: Int = 16,
-      iters: Int = 2): IvfIndex = {
+      iters: Int = 2): IvfIndex =
     graft.engine.CacheRegistry.memo("sim.ivf", dir, nlist, iters)({
       val emb = Tables.load(spark, dir, "embeddings")
       val centroids = kmeansCentroids(emb, nlist, iters)
-      val assigned = emb.withColumn("cell", assignCell(centroids)).persist()
-      assigned.count() // materialize: the build pays the assignment pass
-      IvfIndex(centroids, assigned)
-    })(_.assigned.unpersist(blocking = false))
-  }
+      IvfIndex(centroids, graft.engine.CacheRegistry.materialize(
+        emb.withColumn("cell", assignCell(centroids))))
+    })(_ => ())
 
   /** Persist an IVF index to disk: the centroid list as a tiny parquet
     * (nlist rows) and the assigned vector table PARTITIONED BY cell —
@@ -1264,15 +1261,11 @@ object SimilarityOps {
   /** One split result per (app, dir): the split feeds three plan
     * branches in [[semDedup]] (both pair sides + the verdict join) and
     * every bench pass — build and materialize once, like the IVF index
-    * itself. CacheRegistry-managed (eviction frees the split's
-    * checkpoint blocks; a rebuild re-splits deterministically).
+    * itself (a rebuild re-splits deterministically).
     */
   private def splitCells(spark: SparkSession, dir: String): DataFrame =
-    graft.engine.CacheRegistry.memo("sim.split", dir)({
-        val c = splitOversized(buildIvfIndex(spark, dir).assigned)
-        c.count()
-        c
-      })(graft.engine.CacheRegistry.freeFrame)
+    graft.engine.CacheRegistry.frame("sim.split", dir)(
+      splitOversized(buildIvfIndex(spark, dir).assigned))
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     * deduplication — cluster the corpus embeddings with the SAME
@@ -1647,29 +1640,22 @@ object SimilarityOps {
           lit(8.0f)).otherwise(lit(0.0f)))
         .as("embedding"))
 
-  /** One structured index per (app, dir): the persisted clustered
-    * frame, its IVF assignment (same kmeans/assign code as the real
-    * index), and the query vector — built once, reused by every pass.
-    * The memo value carries the source frame too so eviction can
-    * release BOTH persists (sv feeds assigned's plan but holds its own
-    * blocks).
+  /** One structured index per (app, dir): the clustered frame's IVF
+    * assignment (same kmeans/assign code as the real index) and the
+    * query vector — built once, reused by every pass. The clustered
+    * frame is stored for the k-means rounds, then released.
     */
   private def structuredLane(spark: SparkSession,
-      dir: String): (IvfIndex, Seq[Double]) = {
-    val (idx, q, _) = graft.engine.CacheRegistry.memo("sim.structured", dir)({
-        val sv = structuredEmbeddings(spark, dir).persist()
+      dir: String): (IvfIndex, Seq[Double]) =
+    graft.engine.CacheRegistry.memo("sim.structured", dir)({
+        val sv = graft.engine.CacheRegistry.materialize(
+          structuredEmbeddings(spark, dir))
         val cents = kmeansCentroids(sv, 16, 2)
-        val assigned = sv.withColumn("cell", assignCell(cents)).persist()
-        assigned.count()
         val q = sv.where(col("vec_id") === 0L).select("embedding")
           .head().getSeq[Float](0).map(_.toDouble).toSeq
-        (IvfIndex(cents, assigned), q, sv)
-      })({ case (idx, _, sv) =>
-        idx.assigned.unpersist(blocking = false)
-        sv.unpersist(blocking = false)
-      })
-    (idx, q)
-  }
+        (IvfIndex(cents, graft.engine.CacheRegistry.materialize(
+          sv.withColumn("cell", assignCell(cents)))), q)
+      })(_ => ())
 
   /** The SAME IVFADC path ([[ivfPqProbe]], [[pqAdcColumn]], trained
     * codebooks) over the clustered lane, where recall MUST be high:

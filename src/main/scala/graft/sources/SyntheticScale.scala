@@ -33,8 +33,8 @@ object SyntheticScale {
 
   private val OFF = 10_000_000L
 
-  /** Skewed 10x variant: same replica construction, then a Zipfian hot
-    * key is FORGED onto the shuffle paths AQE must defend —
+  /** The 10x copy; with `skew`, the same replica construction, then a
+    * Zipfian hot key is FORGED onto the shuffle paths AQE must defend —
     * ~10% of all lineitem rows point at one orderkey and ~10% of all
     * events at one user — while documents/embeddings stay untouched
     * (text-side hot keys would blow up LSH bucket membership
@@ -45,10 +45,6 @@ object SyntheticScale {
     * exists so join/groupBy paths are measured under the hot-key
     * distribution a real corpus has.
     */
-  def ensureSkewed(spark: SparkSession, baseDir: String,
-      outDir: String, replicas: Int = 10): Unit =
-    ensure(spark, baseDir, outDir, replicas, skew = true)
-
   def ensure(spark: SparkSession, baseDir: String, outDir: String,
       replicas: Int = 10, skew: Boolean = false): Unit = {
     // replica 26 would get the IDENTITY Caesar rotation (i % 26 == 0),

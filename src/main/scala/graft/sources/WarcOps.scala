@@ -455,7 +455,7 @@ object WarcOps {
     import org.apache.spark.sql.expressions.Window
     import graft.operators.{DedupOps, PrepOps, QualityModelOps}
     val split = graft.streaming.StreamingOps.PipelineSplitId
-    val pool = graft.engine.CacheRegistry.memo("warc.neardup", dir)({
+    val pool = graft.engine.CacheRegistry.frame("warc.neardup", dir)({
         val h = Integer.toHexString(dir.hashCode)
         val bandsTbl = s"graft_pipelsh_b_$h"
         val featsTbl = s"graft_pipelsh_f_$h"
@@ -473,11 +473,8 @@ object WarcOps {
           docs.where(col("doc_id") >= split))))
           .join(s1.select("canon_url"), Seq("canon_url"), "left_anti")
         val s2 = DedupOps.minhashIncrementalDedup(w2, bandsTbl, featsTbl)
-        // both days' survivors are already localCheckpointed by the
-        // dedup (self-invalidation discipline); the union's plan roots
-        // at both LogicalRDDs, so one freeFrame releases both
         s1.unionByName(s2)
-      })(graft.engine.CacheRegistry.freeFrame)
+      })
     val w = QualityModelOps.trainedWeights(spark, dir)
     val gated = pool.where(gateColumn(spark, w))
     PrepOps.packCounted(

@@ -249,15 +249,14 @@ object StreamingOps {
   // The capped twin reuses ONE drained pair set per (app, dataset):
   // its point is the cap semantics, oracle-checked; the live-stream
   // execution cost stays honestly measured by the UNCAPPED
-  // e_stream_join_replay, which drains fresh on every call.
-  // CacheRegistry-managed: eviction frees the drained checkpoint
-  // blocks; a later call re-drains the stream to the same pair set.
+  // e_stream_join_replay, which drains fresh on every call. A rebuild
+  // re-drains the stream to the same pair set.
   def replayClickViewJoin(spark: SparkSession, dir: String,
       capPairsPerKey: Option[Int] = None): DataFrame = {
     val pairs = capPairsPerKey match {
       case None => drainClickViewPairs(spark, dir)
-      case Some(_) => graft.engine.CacheRegistry.memo("stream.drained", dir)(
-        drainClickViewPairs(spark, dir))(graft.engine.CacheRegistry.freeFrame)
+      case Some(_) => graft.engine.CacheRegistry.frame("stream.drained", dir)(
+        drainClickViewPairs(spark, dir))
     }
     val kept = capPairsPerKey match {
       case None => pairs
@@ -760,9 +759,8 @@ object StreamingOps {
     */
   def runFullPipelineStream(spark: SparkSession, dir: String,
       root: String, lshPrefix: Option[String] = None): Unit = {
-    import org.apache.spark.sql.expressions.Window
     import graft.operators.{CorpusOps, QualityModelOps}
-    import graft.sources.{AtomicPublish, WarcOps}
+    import graft.sources.WarcOps
     val replayDir = java.nio.file.Files.createTempDirectory("graft_pipe")
     val cpDir = java.nio.file.Files.createTempDirectory("graft_pipe_cp")
     val docs = graft.Tables.load(spark, dir, "documents")

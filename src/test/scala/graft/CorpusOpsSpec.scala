@@ -175,17 +175,25 @@ class CorpusOpsSpec extends SparkSpec {
 
   test("bpeVocab: counts are non-increasing and round 1 equals bpePairs") {
     val docs = Tables.load(spark, sf, "documents")
-    val vocab = CorpusOps.bpeVocab(docs).collect()
+    val vocab = vocabOf(docs, CorpusOps.BpeMerges)
     assert(vocab.length == CorpusOps.BpeMerges)
-    val cnts = vocab.map(_.getLong(3)).toSeq
+    val cnts = vocab.map(_._4)
     // merging can only remove occurrences or create pairs whose count
     // is bounded by a pre-merge pair's count — the max is monotone
     assert(cnts == cnts.sortBy(-_), s"counts not non-increasing: $cnts")
     // round 1 IS bpePairs' top-1 (same counting, same tie-break)
     val top1 = CorpusOps.bpePairs(docs).head()
-    assert(s"${vocab(0).getString(1)} ${vocab(0).getString(2)}" ==
-      top1.getString(0))
-    assert(vocab(0).getLong(3) == top1.getLong(1))
+    assert(s"${vocab(0)._2} ${vocab(0)._3}" == top1.getString(0))
+    assert(vocab(0)._4 == top1.getLong(1))
+  }
+
+  // the merge loop's vocabulary, with both of its frames freed
+  private def vocabOf(docs: org.apache.spark.sql.DataFrame,
+      merges: Int): Seq[(Int, String, String, Long)] = {
+    val r = CorpusOps.bpeMergeLoop(docs, merges)
+    r.seqs.unpersist()
+    graft.engine.CacheRegistry.freeFrame(r.counts)
+    r.vocab
   }
 
   test("bpeVocab applies merges greedily left-to-right (the replace rule)") {
@@ -193,11 +201,9 @@ class CorpusOpsSpec extends SparkSpec {
     // two, leaving [a·a, a] — so round 2's top pair is (a·a, a), which
     // pins that merges actually rewrite the sequences
     val tiny = Seq((0L, "a a a")).toDF("doc_id", "text")
-    val v = CorpusOps.bpeVocab(tiny, merges = 2).collect()
-    assert(v(0).getString(1) == "a" && v(0).getString(2) == "a" &&
-      v(0).getLong(3) == 2L)
-    assert(v(1).getString(1) == "a\u0002a" && v(1).getString(2) == "a" &&
-      v(1).getLong(3) == 1L)
+    val v = vocabOf(tiny, merges = 2)
+    assert(v(0)._2 == "a" && v(0)._3 == "a" && v(0)._4 == 2L)
+    assert(v(1)._2 == "a\u0002a" && v(1)._3 == "a" && v(1)._4 == 1L)
   }
 
   test("hashed-gram lane: identical output to the text lane, and no " +

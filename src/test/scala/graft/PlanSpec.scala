@@ -81,11 +81,13 @@ class PlanSpec extends SparkSpec {
 
   test("simhash aggregate stays within 23 packed buffers") {
     // 64 separate SUMs pushed the aggregate out of codegen; the packed
-    // formulation carries 22 packed sums + 1 count through the exchange
-    val p = plan("e_dedup_simhash")
+    // formulation carries 22 packed sums + 1 count through the exchange.
+    // e_dedup_simhash reads the aggregate as a frame stored at build
+    // time, so audit the plan of the aggregate it stages
+    val p = graft.operators.DedupOps.simhashAgg(Tables.load(spark, sf, "documents"))
+      .queryExecution.executedPlan.toString
     assert(!p.contains("b63"), "per-bit aggregate columns must not reappear")
-    // the persisted aggregate subtree prints once per consuming branch,
-    // so count sums per HashAggregate LINE, not across the whole string
+    // count sums per HashAggregate LINE, not across the whole string
     val maxSumsPerAgg = p.linesIterator
       .filter(_.contains("partial_sum"))
       .map(l => "partial_sum".r.findAllIn(l).size)
@@ -276,7 +278,8 @@ class PlanSpec extends SparkSpec {
       .probeIvf(graft.operators.SimilarityOps.buildIvfIndex(spark, sf),
         Seq.fill(64)(0.1), nprobe = 4, k = 10)
     val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("InMemoryTableScan") || p.contains("TableCacheQueryStage"),
+    // the stored assignment frame is a checkpoint: an existing-RDD scan
+    assert(p.contains("Scan ExistingRDD") && !p.contains("FileScan"),
       s"probe must read the persisted index, not rebuild it:\n$p")
     assert(p.contains("TakeOrderedAndProject"),
       "probe top-k must not global-sort")

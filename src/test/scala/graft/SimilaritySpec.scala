@@ -236,7 +236,13 @@ class SimilaritySpec extends SparkSpec {
     val idx1 = SimilarityOps.buildIvfIndex(spark, sf)
     val idx2 = SimilarityOps.buildIvfIndex(spark, sf)
     assert(idx1 eq idx2, "second build must return the cached index")
-    assert(idx1.assigned.storageLevel.useMemory,
+    // stored at build time: a checkpoint whose every block is stored
+    val rdd = idx1.assigned.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+      case p => fail(s"assignment table is not a stored frame:\n$p")
+    }
+    assert(rdd.getStorageLevel.useMemory && spark.sparkContext.getRDDStorageInfo
+      .exists(i => i.id == rdd.id && i.numCachedPartitions == i.numPartitions),
       "assignment table must be persisted at build time")
   }
 

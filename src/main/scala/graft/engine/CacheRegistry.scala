@@ -11,7 +11,8 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
   *
   * Operators memoize expensive builds (staged feature frames, the CC
   * label table, the IVF assignment, BPE merges, on-disk indexes and
-  * publish roots, trained weights, the plan audit) so bench warm
+  * publish roots, trained weights, the plan audit, the fixture tables'
+  * parquet schemas) so bench warm
   * passes, r_catalog's schema walk and composed pipelines pay each
   * build once. An UNBOUNDED memo is a scale-killer (the r14 768 MB
   * spill rehearsal: `e_dedup_simhash_md5` died with
@@ -91,9 +92,9 @@ object CacheRegistry {
     * cycle length of a fixed cyclic scan has a 0% hit rate — measured
     * r16: cap 16 re-paid EVERY memoized build on every bench pass
     * (e_dedup_incr_minhash 9.55 s/pass vs 0.09 s warm, ~60 s of the
-    * 253 s total). One full pass of every query (r_catalog aside)
-    * leaves 40 entries at sf0.01, and a two-dataset pass (the
-    * two-scale sweep shape) leaves 80, so the default is 128.
+    * 253 s total). One full pass of every query leaves 50 entries at
+    * sf0.01 (ten of them table schemas), and a two-dataset pass (the
+    * two-scale sweep shape) leaves 100, so the default is 128.
     */
   def maxResident: Int =
     sys.props.get("graft.cache.maxResident").map(_.toInt).getOrElse(128)
@@ -316,6 +317,9 @@ object CacheRegistry {
   // must hold the monitor: the RDDs resident entries record
   private def recordedIds(): Set[Int] =
     entries.values().asScala.flatMap(_.rddIds).toSet
+
+  /** The RDDs resident entries record: storage the registry owns. */
+  private[graft] def recordedRddIds: Set[Int] = synchronized(recordedIds())
 
   /** Total measured bytes currently pinned by resident entries. */
   def residentBytes: Long = synchronized {

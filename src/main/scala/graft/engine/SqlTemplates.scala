@@ -26,12 +26,18 @@ object SqlTemplates {
     */
   def positionalArity(sqlText: String): Int = sqlText.count(_ == '?')
 
+  // a `:name` marker, or text where a colon is no marker: quoted
+  // strings and identifiers, comments, the `::` cast
+  private val Marker =
+    """'(?:[^'\\]++|\\.)*+'|"(?:[^"\\]++|\\.)*+"|`[^`]*+`|--[^\n]*+|/\*(?s:.*?)\*/|::|:(\w+)""".r
+
   /** Extract named markers — the reference's `$var` extraction
     * (examiner.js:198-204, regex `\$(\w+)`); Spark's marker syntax is
-    * `:name`.
+    * `:name`. A colon inside quotes or a comment, or in a `::` cast, is
+    * not a marker, as Spark's parser reads it.
     */
   def namedVars(sqlText: String): Seq[String] =
-    ":(\\w+)".r.findAllMatchIn(sqlText).map(_.group(1)).toSeq.distinct
+    Marker.findAllMatchIn(sqlText).flatMap(m => Option(m.group(1))).toSeq.distinct
 
   /** Run a template with positional args. Missing args fail up front
     * with the reference's error shape (`Missing parameter: pN`,
@@ -42,7 +48,7 @@ object SqlTemplates {
     val need = positionalArity(sqlText)
     if (args.length < need)
       throw new IllegalArgumentException(s"Missing parameter: p${args.length + 1}")
-    Tables.registerViews(spark, dir)
+    Tables.registerViewsFor(spark, dir, sqlText)
     spark.sql(sqlText, args.toArray)
   }
 
@@ -55,7 +61,7 @@ object SqlTemplates {
     namedVars(sqlText).foreach(v =>
       if (!args.contains(v))
         throw new IllegalArgumentException(s"""Parameter "$v" is required!"""))
-    Tables.registerViews(spark, dir)
+    Tables.registerViewsFor(spark, dir, sqlText)
     spark.sql(sqlText, args)
   }
 

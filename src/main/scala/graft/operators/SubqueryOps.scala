@@ -41,7 +41,7 @@ object SubqueryOps {
   // against DuckDB's independent subquery implementation on the
   // identical text.
   private def sqlQ(text: String): Q = (spark, dir) => {
-    Tables.registerViews(spark, dir)
+    Tables.registerViewsFor(spark, dir, text)
     spark.sql(text)
   }
 

@@ -108,7 +108,7 @@ object StreamingOps {
       queryName: String, replayDir: java.nio.file.Path)(
       transform: DataFrame => DataFrame): StreamingQuery = {
     // raw parquet schema (pre ts-conversion): stream sees what's on disk
-    val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    val batchSchema = Tables.schema(spark, dir, "events")
     val stream = spark.readStream
       .schema(batchSchema)
       .format("parquet")
@@ -227,7 +227,7 @@ object StreamingOps {
   private def drainClickViewPairs(spark: SparkSession,
       dir: String): DataFrame = {
     val staged = stageReplay(dir, "events.parquet")
-    val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
+    val batchSchema = Tables.schema(spark, dir, "events")
     def source(): DataFrame =
       Tables.normalizeTs(spark.readStream
         .schema(batchSchema).format("parquet").load(staged.toString))
@@ -360,7 +360,7 @@ object StreamingOps {
     val docs = Tables.load(spark, dir, "documents")
     val evalSets = graft.operators.DedupOps.evalShingleSets(docs)
     val replayDir = stageReplay(dir, "documents.parquet")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.schema(spark, dir, "documents")
     val stream = spark.readStream
       .schema(schema).format("parquet").load(replayDir.toString)
     val evs = stream.select(xxhash64(col("text")).as("fingerprint"),
@@ -396,7 +396,7 @@ object StreamingOps {
     // GD trajectory (a Spark job per iteration) on every invocation
     val w = QualityModelOps.trainedWeights(spark, dir)
     val replayDir = stageReplay(dir, "documents.parquet")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.schema(spark, dir, "documents")
     val stream = spark.readStream
       .schema(schema).format("parquet").load(replayDir.toString)
     val name = s"graft_replay_${replaySeq.incrementAndGet()}"
@@ -481,7 +481,7 @@ object StreamingOps {
     val cust = Tables.load(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
     val staged = stageReplay(dir, "events.parquet")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.schema(spark, dir, "events")
     val stream = Tables.normalizeTs(spark.readStream
       .schema(schema).format("parquet").load(staged.toString))
     val name = s"graft_replay_${replaySeq.incrementAndGet()}"
@@ -548,7 +548,7 @@ object StreamingOps {
   def replayUpsertStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val staged = stageReplay(dir, "orders.parquet")
-    val schema = spark.read.parquet(s"$dir/orders.parquet").schema
+    val schema = Tables.schema(spark, dir, "orders")
     val compacted = compactUpserts(spark.readStream
       .schema(schema).format("parquet").load(staged.toString)
       .select(col("o_custkey").cast("long"), col("o_orderkey").cast("long"),
@@ -586,7 +586,7 @@ object StreamingOps {
   def replayDedupStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val staged = stageReplay(dir, "documents.parquet")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.schema(spark, dir, "documents")
     val events = spark.readStream
       .schema(schema).format("parquet").load(staged.toString)
       .select(graft.functions.TextShingles.md5Hash60(col("text"))
@@ -621,7 +621,7 @@ object StreamingOps {
   def replayPublishStream(spark: SparkSession, dir: String,
       root: String): Unit = {
     val staged = stageReplay(dir, "documents.parquet")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.schema(spark, dir, "documents")
     val stream = spark.readStream
       .schema(schema).format("parquet").load(staged.toString)
       .select("doc_id", "lang", "source", "n_chars")

@@ -69,6 +69,20 @@ class PropertySpec extends SparkSpec {
       == Seq("x", "y"))
   }
 
+  test("named-var extraction skips casts, quoted text and comments") {
+    val cases = Seq(
+      "SELECT :id::string AS s" -> Seq("id"),
+      "SELECT '12:30:00' AS t, :id AS i" -> Seq("id"),
+      "SELECT \"a:b\" AS t, 'it\\'s :x' AS u, :id AS `c:d`" -> Seq("id"),
+      "SELECT :id AS i -- :note\n/* :skip */ , :ok AS o" -> Seq("id", "ok"))
+    for ((text, vars) <- cases) {
+      assert(SqlTemplates.namedVars(text) == vars, text)
+      val args: Map[String, Any] = vars.map(_ -> 7).toMap
+      assert(spark.sql(text, args).collect().length == 1, text)
+      assert(SqlTemplates.named(spark, sf, text, args).collect().length == 1, text)
+    }
+  }
+
   test("keyset pages tile the global sort for any page size") {
     val full = graft.Tables.load(spark, sf, "customer")
       .orderBy("c_acctbal", "c_custkey")

@@ -48,16 +48,20 @@ class ScaleRehearsalSpec extends SparkSpec {
     try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
-  /** Run `f`, then unpersist only the frames it pinned (the staged
-    * feature tables persist internally; other suites' caches — e.g.
-    * the IVF index PlanSpec asserts on — must stay untouched).
+  /** Run `f`, then unpersist only the frames it pinned itself: other
+    * suites' caches — e.g. the IVF index PlanSpec asserts on — stay
+    * untouched, and so does every RDD a resident memo entry records
+    * (the staged feature tables): the registry owns and frees those.
     */
   private def cleaningUp[A](f: => A): A = {
     val before = spark.sparkContext.getPersistentRDDs.keySet
     try f
-    finally spark.sparkContext.getPersistentRDDs
-      .filterNot { case (id, _) => before.contains(id) }
-      .foreach { case (_, rdd) => rdd.unpersist(blocking = false) }
+    finally {
+      val owned = graft.engine.CacheRegistry.recordedRddIds
+      spark.sparkContext.getPersistentRDDs
+        .filterNot { case (id, _) => before.contains(id) || owned(id) }
+        .foreach { case (_, rdd) => rdd.unpersist(blocking = false) }
+    }
   }
 
   test("minhash candidate pairs grow linearly with corpus size", Slow) {

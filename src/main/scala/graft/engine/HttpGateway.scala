@@ -1,6 +1,5 @@
 package graft.engine
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.Executors
 
@@ -199,7 +198,7 @@ object HttpGateway {
 
   /** Bind 127.0.0.1 on an ephemeral port and serve `ns` over HTTP. */
   def start(ns: Namespaces, spark: SparkSession, dir: String): HttpGateway = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.Loopback.bind()
     val pool = Executors.newFixedThreadPool(4)
     server.setExecutor(pool)
     val g = new HttpGateway(server, pool, ns, spark, dir)

@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.{ConcurrentLinkedQueue, Executors}
 
@@ -134,7 +133,7 @@ final class HttpFixtureServer private (server: HttpServer,
 object HttpFixtureServer {
   /** Bind 127.0.0.1 on an ephemeral port and start serving. */
   def start(): HttpFixtureServer = {
-    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    val server = graft.Loopback.bind()
     val pool = Executors.newFixedThreadPool(4)
     server.setExecutor(pool)
     val s = new HttpFixtureServer(server, pool)

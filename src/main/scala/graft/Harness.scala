@@ -69,17 +69,19 @@ object Harness {
   /** The one session builder: `local[cpus]` with as many shuffle
     * partitions, UTC, parquet TIMESTAMP(NANOS) read as a long (the
     * `events` table; [[Tables.load]] converts it back), managed tables
-    * under a temp warehouse rather than the cwd, no UI, WARN logging.
-    * `extra` confs go on top.
+    * under a temp warehouse (deleted at exit) rather than the cwd, no
+    * UI, WARN logging. `extra` confs go on top.
     */
   private[graft] def session(cpus: Int, extra: (String, String)*): SparkSession = {
+    val warehouse = Files.createTempDirectory("graft_wh").toFile
+    // managed tables live as long as the process that wrote them
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(warehouse))
     val builder = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft_wh").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .config("spark.ui.enabled", "false")
     val spark = extra.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()

@@ -4,7 +4,8 @@ import java.nio.charset.StandardCharsets
 import java.util.concurrent.Executors
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, struct, to_json}
 
 /** The reference's HTTP transport bound to [[Router.dispatch]] — the
   * K5 surface: a loopback daemon whose every response passes the CORS
@@ -27,10 +28,11 @@ import org.apache.spark.sql.SparkSession
   *
   * Scope note (the reference's own shape): results materialize on the
   * gateway process — the transport is for CATALOG/CONTROL-sized
-  * answers, and the registry's limit clamp [1,1000] (F2) bounds every
-  * template-backed page. This daemon exists for wire-level parity,
-  * not as the 100 TB data path; large results ship through the
-  * dataset sinks.
+  * answers, and [[HttpGateway.resultRows]] plans the registry's limit
+  * clamp [1,1000] (F2) into every query, as the reference's backend
+  * sees the page bound with the SQL text (index.js:246-258). This
+  * daemon exists for wire-level parity, not as the 100 TB data path;
+  * large results ship through the dataset sinks.
   */
 final class HttpGateway private (server: HttpServer,
     pool: java.util.concurrent.ExecutorService, ns: Namespaces,
@@ -150,12 +152,12 @@ final class HttpGateway private (server: HttpServer,
                   // Driver-side materialization is CLAMPED to the
                   // registry's F2 page bound: an unbounded full-scan
                   // served over HTTP would otherwise be a driver OOM at
-                  // scale. take(N) runs an incremental bounded job (no
-                  // full collect); clients paging past the clamp use the
-                  // registry's keyset pagination. Every declared
-                  // reference query pages under the clamp, so envelope
-                  // parity is unchanged on the contract surface.
-                  val rows = df.toJSON.take(HttpGateway.MaxResultRows)
+                  // scale. The limit is planned into the query, so a
+                  // sorted result runs as a top-N, not a full sort;
+                  // clients paging past the clamp use the registry's
+                  // keyset pagination. Every declared reference query
+                  // pages under the clamp.
+                  val rows = HttpGateway.resultRows(df)
                   respond(ex, 200,
                     s"""{"results":[${rows.mkString(",")}],"ok":true}""")
               }
@@ -180,6 +182,18 @@ object HttpGateway {
     * unbounded result on the gateway process.
     */
   val MaxResultRows: Int = 1000
+
+  /** A result's first [[MaxResultRows]] rows as JSON objects, in one
+    * collect. The limit sits under the JSON projection, where the
+    * planner sees it: over a sort it plans as one top-N job
+    * (`TakeOrderedAndProjectExec`), otherwise as `CollectLimitExec`;
+    * `to_json` encodes the rows in generated code. The objects equal
+    * `df.toJSON`'s for every column type but single-field ANSI
+    * intervals and struct-keyed maps (HttpGatewaySpec pins both).
+    */
+  def resultRows(df: DataFrame): Array[String] =
+    df.limit(MaxResultRows).select(to_json(struct(col("*"))))
+      .collect().map(_.getString(0))
 
   /** A JSON string literal: backslash, quote and EVERY control char
     * (< 0x20) escaped — a raw tab or CR in a string makes a strict

@@ -3,6 +3,9 @@ package graft
 import java.net.{HttpURLConnection, URI}
 import scala.io.Source
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
+
 import graft.engine.{ConfigBoot, HttpGateway, Namespaces, Router}
 import graft.operators.ReferenceOps
 
@@ -183,5 +186,99 @@ class HttpGatewaySpec extends SparkSpec
       (System.nanoTime() - t0) / 1e6
     }.sorted
     assert(ms(10) < 20.0, s"median catalog hit ${ms(10)} ms: ${ms.mkString(",")}")
+  }
+
+  /** The gateway's rendering before it planned the clamp inside the query. */
+  private def takeRows(df: DataFrame): Seq[String] =
+    df.toJSON.take(HttpGateway.MaxResultRows).toSeq
+
+  private def sameRendering(what: String, df: DataFrame): Unit =
+    assert(HttpGateway.resultRows(df).toSeq == takeRows(df), what)
+
+  test("resultRows renders every fixture table's rows byte-identically " +
+      "to toJSON.take") {
+    Tables.registerViews(spark, sf)
+    Tables.names.foreach(n => sameRendering(n, spark.sql(s"SELECT * FROM $n")))
+  }
+
+  test("resultRows renders nulls, nested types, duplicate and odd " +
+      "names, control characters and an empty result byte-identically") {
+    import spark.implicits._
+    sameRendering("every atomic type", spark.sql(
+      """SELECT true AS bo, CAST(1 AS TINYINT) AS by, CAST(2 AS SMALLINT) AS sh,
+        |3 AS i, 4L AS l, CAST('NaN' AS FLOAT) AS f, CAST('-Infinity' AS DOUBLE) AS d,
+        |1.5E-7D AS e, CAST(12.345 AS DECIMAL(38, 18)) AS dec, 'x' AS s,
+        |X'00FF' AS bin, DATE'2020-02-29' AS dt,
+        |TIMESTAMP'2020-02-29 12:34:56.789012' AS ts,
+        |TIMESTAMP_NTZ'2020-02-29 12:34:56.7' AS ntz""".stripMargin))
+    sameRendering("nulls", spark.sql(
+      """SELECT CAST(NULL AS INT) AS a, 'x' AS b, CAST(NULL AS STRING) AS c,
+        |array(1, NULL) AS arr, map('k', NULL) AS m,
+        |named_struct('p', NULL, 'q', 1) AS st,
+        |CAST(NULL AS STRUCT<p: INT>) AS nst""".stripMargin))
+    sameRendering("nested arrays, maps and structs", spark.sql(
+      """SELECT array(array(1, 2), array()) AS aa,
+        |array(named_struct('k', 1, 'v', array('a'))) AS ast,
+        |map('a', array(1.5D), 'b', array()) AS ma,
+        |map(1, map('x', named_struct('y', true))) AS mm,
+        |named_struct('m', map('k', 2), 'a', array(named_struct('z', 'w'))) AS sm
+        |""".stripMargin))
+    Tables.registerViews(spark, sf)
+    sameRendering("duplicate column names", spark.sql(
+      "SELECT * FROM region a JOIN region b ON a.r_regionkey = b.r_regionkey"))
+    sameRendering("odd names", spark.range(2).select(col("id").as("a.b"),
+      lit("t").as("x`y"), lit(3).as(""), col("id").as(" \"q\"")))
+    sameRendering("control characters",
+      Seq("a\u0000b\t\n\r\u001f\"\\\u007f\u2028é/").toDF("s\u0001"))
+    val empty = spark.range(0).toDF("id")
+    assert(HttpGateway.resultRows(empty).isEmpty)
+    sameRendering("an empty result", empty)
+  }
+
+  test("resultRows renders single-field ANSI intervals and struct-keyed " +
+      "maps differently from toJSON.take (no declared query returns either)") {
+    def both(sql: String) = {
+      val df = spark.sql(sql)
+      (HttpGateway.resultRows(df).toSeq, takeRows(df))
+    }
+    // toJSON's row encoder widens the interval to its type's full range
+    assert(both("SELECT INTERVAL '1' DAY AS i") == (
+      Seq("""{"i":"INTERVAL '1' DAY"}"""),
+      Seq("""{"i":"INTERVAL '1 00:00:00' DAY TO SECOND"}""")))
+    assert(both("SELECT INTERVAL '1' YEAR AS i") == (
+      Seq("""{"i":"INTERVAL '1' YEAR"}"""),
+      Seq("""{"i":"INTERVAL '1-0' YEAR TO MONTH"}""")))
+    // a struct map key is written as its row's string form in both
+    assert(both("SELECT map(named_struct('a', 0, 'b', 1), 2) AS m") == (
+      Seq("""{"m":{"[0,1]":2}}"""),
+      Seq("""{"m":{"[0,0,1]":2}}""")))
+  }
+
+  test("the clamp is planned inside the query: a sorted route without " +
+      "LIMIT runs one top-N job, a join + GROUP BY + ORDER BY route three") {
+    val routes = ConfigBoot.boot(
+      """{"databases": [{"name": "jobs", "type": "spark", "queries": {
+        |  "lines_by_order": "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem WHERE l_orderkey = ? ORDER BY l_linenumber",
+        |  "segment_nation": "SELECT c.c_mktsegment, n.n_name, count(*) AS n_cust, max(c.c_acctbal) AS max_bal FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey WHERE c.c_mktsegment = ? GROUP BY c.c_mktsegment, n.n_name ORDER BY n.n_name"
+        |}}]}""".stripMargin)
+    // a request's query work, run on this thread so `jobsOf` can tag
+    // its jobs (the gateway's worker threads do not carry the tag)
+    def request(path: String): Seq[String] = HttpGateway.resultRows(
+      Router.dispatch(routes, path)(spark, sf).fold(e => fail(e), identity)).toSeq
+    // the first request of each route also reads the tables' schemas
+    request("/q/jobs/lines_by_order/1")
+    request("/q/jobs/segment_nation/BUILDING")
+    for (key <- Seq(3, 7)) {
+      var rows = Seq.empty[String]
+      assert(jobsOf { rows = request(s"/q/jobs/lines_by_order/$key") } == 1,
+        s"lines_by_order/$key")
+      assert(rows.nonEmpty, s"lines_by_order/$key returned no rows")
+    }
+    for (seg <- Seq("AUTOMOBILE", "MACHINERY")) {
+      var rows = Seq.empty[String]
+      assert(jobsOf { rows = request(s"/q/jobs/segment_nation/$seg") } == 3,
+        s"segment_nation/$seg")
+      assert(rows.nonEmpty, s"segment_nation/$seg returned no rows")
+    }
   }
 }

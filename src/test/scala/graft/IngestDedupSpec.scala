@@ -42,45 +42,46 @@ class IngestDedupSpec extends SparkSpec {
     val day1 = docs.where(col("doc_id") % 2 === 0)
     val day2 = docs.where(col("doc_id") % 2 === 1)
     val prefix = s"ingest_crash_${System.nanoTime()}"
-    val root = java.nio.file.Files
-      .createTempDirectory("ingest_spec_pub").toString
+    withTempDir("ingest_spec_pub") { dir =>
+      val root = dir.toString
 
-    // batch 0 commits fully
-    val s1 = DedupOps.minhashDedupBatchVersioned(day1, prefix, 0L)
-    assert(AtomicPublish.publishStreamBatch(proj(s1), root, 0L))
+      // batch 0 commits fully
+      val s1 = DedupOps.minhashDedupBatchVersioned(day1, prefix, 0L)
+      assert(AtomicPublish.publishStreamBatch(proj(s1), root, 0L))
 
-    // batch 1: dedup + index append commit, then CRASH before publish
-    val s2a = DedupOps.minhashDedupBatchVersioned(day2, prefix, 1L)
-    val s2aIds = ids(s2a)
-    val bandsFiles = spark.table(s"${prefix}_b1").inputFiles.toSet
-    val featsFiles = spark.table(s"${prefix}_f1").inputFiles.toSet
+      // batch 1: dedup + index append commit, then CRASH before publish
+      val s2a = DedupOps.minhashDedupBatchVersioned(day2, prefix, 1L)
+      val s2aIds = ids(s2a)
+      val bandsFiles = spark.table(s"${prefix}_b1").inputFiles.toSet
+      val featsFiles = spark.table(s"${prefix}_f1").inputFiles.toSet
 
-    // RESTART: foreachBatch redelivers batch 1 — the epoch guard must
-    // RECOVER the committed survivor set without touching the index
-    val s2b = DedupOps.minhashDedupBatchVersioned(day2, prefix, 1L)
-    assert(ids(s2b) == s2aIds, "recovered survivors diverged")
-    assert(spark.table(s"${prefix}_b1").inputFiles.toSet == bandsFiles,
-      "replay double-indexed the band table")
-    assert(spark.table(s"${prefix}_f1").inputFiles.toSet == featsFiles,
-      "replay double-indexed the feature table")
-    assert(AtomicPublish.publishStreamBatch(proj(s2b), root, 1L))
+      // RESTART: foreachBatch redelivers batch 1 — the epoch guard must
+      // RECOVER the committed survivor set without touching the index
+      val s2b = DedupOps.minhashDedupBatchVersioned(day2, prefix, 1L)
+      assert(ids(s2b) == s2aIds, "recovered survivors diverged")
+      assert(spark.table(s"${prefix}_b1").inputFiles.toSet == bandsFiles,
+        "replay double-indexed the band table")
+      assert(spark.table(s"${prefix}_f1").inputFiles.toSet == featsFiles,
+        "replay double-indexed the feature table")
+      assert(AtomicPublish.publishStreamBatch(proj(s2b), root, 1L))
 
-    // crash AFTER the publish commit: a further replay recovers the
-    // survivors again and the publish guard skips — nothing changes
-    val s2c = DedupOps.minhashDedupBatchVersioned(day2, prefix, 1L)
-    assert(ids(s2c) == s2aIds)
-    assert(!AtomicPublish.publishStreamBatch(proj(s2c), root, 1L),
-      "a committed batch id must be skipped by the publish guard")
-    val st = AtomicPublish.currentStream(root).get
-    assert(st.lastBatch == 1L && st.dirs == Seq("batch-0", "batch-1"))
+      // crash AFTER the publish commit: a further replay recovers the
+      // survivors again and the publish guard skips — nothing changes
+      val s2c = DedupOps.minhashDedupBatchVersioned(day2, prefix, 1L)
+      assert(ids(s2c) == s2aIds)
+      assert(!AtomicPublish.publishStreamBatch(proj(s2c), root, 1L),
+        "a committed batch id must be skipped by the publish guard")
+      val st = AtomicPublish.currentStream(root).get
+      assert(st.lastBatch == 1L && st.dirs == Seq("batch-0", "batch-1"))
 
-    // end state: the published corpus IS the batch two-day replay —
-    // every survivor exactly once
-    val pub = AtomicPublish.readStreamPublished(spark, root)
-      .select("doc_id").as[Long].collect().toSeq
-    assert(pub.distinct.size == pub.size, "duplicate published doc")
-    assert(pub.toSet ==
-      ids(SparkEntry.queries("e_dedup_incr_minhash")(spark, sf)))
+      // end state: the published corpus IS the batch two-day replay —
+      // every survivor exactly once
+      val pub = AtomicPublish.readStreamPublished(spark, root)
+        .select("doc_id").as[Long].collect().toSeq
+      assert(pub.distinct.size == pub.size, "duplicate published doc")
+      assert(pub.toSet ==
+        ids(SparkEntry.queries("e_dedup_incr_minhash")(spark, sf)))
+    }
   }
 
   test("index compaction mid-stream preserves exactly-once: replays " +

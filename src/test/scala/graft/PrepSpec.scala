@@ -150,17 +150,19 @@ class PrepSpec extends SparkSpec {
 
   test("jsonl shard export is total and membership-stable on re-read") {
     val docs = Tables.load(spark, sf, "documents")
-    val out = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
-    val n = graft.operators.PrepOps.writeJsonlShards(docs, out, 8)
-    assert(n == docs.count())
-    val back = spark.read.json(out)
-    assert(back.count() == n, "every document survives the round trip")
-    // shard membership on re-read must equal the content-hash rule
-    val rule = pmod(graft.functions.TextShingles
-      .md5Hash60(col("doc_id").cast("string")), lit(8L))
-    assert(back.where(col("shard") =!= rule).count() == 0,
-      "shard dirs must encode the md5-60bit assignment")
-    assert(back.select("shard").distinct().count() == 8)
+    withTempDir("graft_jsonl") { dir =>
+      val out = dir.toString
+      val n = graft.operators.PrepOps.writeJsonlShards(docs, out, 8)
+      assert(n == docs.count())
+      val back = spark.read.json(out)
+      assert(back.count() == n, "every document survives the round trip")
+      // shard membership on re-read must equal the content-hash rule
+      val rule = pmod(graft.functions.TextShingles
+        .md5Hash60(col("doc_id").cast("string")), lit(8L))
+      assert(back.where(col("shard") =!= rule).count() == 0,
+        "shard dirs must encode the md5-60bit assignment")
+      assert(back.select("shard").distinct().count() == 8)
+    }
   }
 
   test("k-anonymity: published classes have >= k members, totals balance") {

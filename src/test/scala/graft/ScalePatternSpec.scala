@@ -147,28 +147,30 @@ class ScalePatternSpec extends SparkSpec {
   }
 
   test("partitioned-sorted write lays out directories and sorted row groups") {
-    val out = java.nio.file.Files.createTempDirectory("graft_layout").toString
-    val docs = Tables.load(spark, sf, "documents")
-      .select("doc_id", "lang", "n_chars", "text")
-    ZOrder.writePartitionedSorted(docs, out, "lang",
-      ZOrder.interleave(col("doc_id"), col("n_chars"), 16))
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
-      .map(_.getName).toSet
-    val langs = docs.select("lang").distinct().as[String].collect().toSet
-    assert(dirs == langs.map(l => s"lang=$l"),
-      s"one directory per partition value, got $dirs")
-    // read back: content identical, and rows inside each file arrive in
-    // clustering-key order (min/max row-group stats are selective)
-    val back = spark.read.parquet(out)
-    assert(back.count() == docs.count())
-    val perFileSorted = back
-      .withColumn("z", ZOrder.interleave(col("doc_id"), col("n_chars"), 16))
-      .withColumn("f", input_file_name())
-      .groupBy("f")
-      .agg(expr("collect_list(z)").as("zs"))
-      .as[(String, Seq[Long])].collect()
-    perFileSorted.foreach { case (f, zs) =>
-      assert(zs == zs.sorted, s"file $f not sorted by the clustering key")
+    withTempDir("graft_layout") { dir =>
+      val out = dir.toString
+      val docs = Tables.load(spark, sf, "documents")
+        .select("doc_id", "lang", "n_chars", "text")
+      ZOrder.writePartitionedSorted(docs, out, "lang",
+        ZOrder.interleave(col("doc_id"), col("n_chars"), 16))
+      val dirs = new java.io.File(out).listFiles().filter(_.isDirectory)
+        .map(_.getName).toSet
+      val langs = docs.select("lang").distinct().as[String].collect().toSet
+      assert(dirs == langs.map(l => s"lang=$l"),
+        s"one directory per partition value, got $dirs")
+      // read back: content identical, and rows inside each file arrive in
+      // clustering-key order (min/max row-group stats are selective)
+      val back = spark.read.parquet(out)
+      assert(back.count() == docs.count())
+      val perFileSorted = back
+        .withColumn("z", ZOrder.interleave(col("doc_id"), col("n_chars"), 16))
+        .withColumn("f", input_file_name())
+        .groupBy("f")
+        .agg(expr("collect_list(z)").as("zs"))
+        .as[(String, Seq[Long])].collect()
+      perFileSorted.foreach { case (f, zs) =>
+        assert(zs == zs.sorted, s"file $f not sorted by the clustering key")
+      }
     }
   }
 

@@ -75,134 +75,142 @@ class SimilaritySpec extends SparkSpec {
       "over a pruned scan with the query batch broadcast") {
     import org.apache.spark.sql.functions.col
     val built = SimilarityOps.buildIvfIndex(spark, sf)
-    val path = java.nio.file.Files.createTempDirectory("ivf_bulk").toString
-    SimilarityOps.saveIvfIndex(built, path)
-    val loaded = SimilarityOps.loadIvfIndex(spark, path)
-    val qs = Tables.load(spark, sf, "embeddings")
-      .where(col("vec_id") < 8L)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val bulk = SimilarityOps.probeIvfMany(loaded, qs, nprobe = 4, k = 5)
-    val byQuery = bulk.orderBy("q_id", "nn_rank")
-      .as[(Long, Long, Double, Int)].collect().toSeq.groupBy(_._1)
-    assert(byQuery.keySet == (0L until 8L).toSet, "one group per query")
-    // semantics: each query's rows ARE probeIvf's answer for that query
-    for (q <- 0L until 8L) {
-      val single = SimilarityOps.probeIvf(loaded,
-          SimilarityOps.vectorOf(spark, sf, q), nprobe = 4, k = 5,
-          excludeId = q)
-        .as[(Long, Double)].collect().toSeq
-      assert(byQuery(q).sortBy(_._4).map(r => (r._2, r._3)) == single,
-        s"bulk result for query $q diverged from the single-vector probe")
+    withTempDir("ivf_bulk") { dir =>
+      val path = dir.toString
+      SimilarityOps.saveIvfIndex(built, path)
+      val loaded = SimilarityOps.loadIvfIndex(spark, path)
+      val qs = Tables.load(spark, sf, "embeddings")
+        .where(col("vec_id") < 8L)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+      val bulk = SimilarityOps.probeIvfMany(loaded, qs, nprobe = 4, k = 5)
+      val byQuery = bulk.orderBy("q_id", "nn_rank")
+        .as[(Long, Long, Double, Int)].collect().toSeq.groupBy(_._1)
+      assert(byQuery.keySet == (0L until 8L).toSet, "one group per query")
+      // semantics: each query's rows ARE probeIvf's answer for that query
+      for (q <- 0L until 8L) {
+        val single = SimilarityOps.probeIvf(loaded,
+            SimilarityOps.vectorOf(spark, sf, q), nprobe = 4, k = 5,
+            excludeId = q)
+          .as[(Long, Double)].collect().toSeq
+        assert(byQuery(q).sortBy(_._4).map(r => (r._2, r._3)) == single,
+          s"bulk result for query $q diverged from the single-vector probe")
+      }
+      // scale shape: the index scan is cell-partition-pruned to the
+      // UNION of probed cells, the bounded query batch broadcasts (the
+      // corpus never moves), and nothing degenerates to a nested loop
+      val audit = graft.engine.PlanAudit.audit(bulk)
+      assert(audit.partitionPrunedScans >= 1,
+        s"bulk probe must prune cell partitions: ${audit.render}")
+      val plan = bulk.queryExecution.executedPlan.toString
+      assert(plan.contains("Broadcast"), "query batch must broadcast")
+      assert(!plan.contains("CartesianProduct") &&
+        !plan.contains("BroadcastNestedLoop"),
+        s"bulk probe degenerated to a product join:\n$plan")
     }
-    // scale shape: the index scan is cell-partition-pruned to the
-    // UNION of probed cells, the bounded query batch broadcasts (the
-    // corpus never moves), and nothing degenerates to a nested loop
-    val audit = graft.engine.PlanAudit.audit(bulk)
-    assert(audit.partitionPrunedScans >= 1,
-      s"bulk probe must prune cell partitions: ${audit.render}")
-    val plan = bulk.queryExecution.executedPlan.toString
-    assert(plan.contains("Broadcast"), "query batch must broadcast")
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoop"),
-      s"bulk probe degenerated to a product join:\n$plan")
   }
 
   test("filtered bulk probe equals the single-vector filtered probe " +
       "per query — the predicate rides the pruned scan") {
     import org.apache.spark.sql.functions.col
     val built = SimilarityOps.buildIvfIndex(spark, sf)
-    val path = java.nio.file.Files.createTempDirectory("ivf_bulkf").toString
-    SimilarityOps.saveIvfIndex(built, path)
-    val loaded = SimilarityOps.loadIvfIndex(spark, path)
-    val qs = Tables.load(spark, sf, "embeddings")
-      .where(col("vec_id") < 8L)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val bulk = SimilarityOps.probeIvfMany(loaded, qs, nprobe = 4, k = 5,
-      pred = col("label") % 2 === 0)
-    val byQuery = bulk.orderBy("q_id", "nn_rank")
-      .as[(Long, Long, Double, Int)].collect().toSeq.groupBy(_._1)
-    for (q <- 0L until 8L) {
-      val single = SimilarityOps.probeIvfFiltered(loaded,
-          SimilarityOps.vectorOf(spark, sf, q), col("label") % 2 === 0,
-          nprobe = 4, k = 5, excludeId = q)
-        .select("vec_id", "cos_sim")
-        .as[(Long, Double)].collect().toSeq
-      assert(byQuery.getOrElse(q, Seq.empty).sortBy(_._4)
-          .map(r => (r._2, r._3)) == single,
-        s"filtered bulk result for query $q diverged from probeIvfFiltered")
+    withTempDir("ivf_bulkf") { dir =>
+      val path = dir.toString
+      SimilarityOps.saveIvfIndex(built, path)
+      val loaded = SimilarityOps.loadIvfIndex(spark, path)
+      val qs = Tables.load(spark, sf, "embeddings")
+        .where(col("vec_id") < 8L)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+      val bulk = SimilarityOps.probeIvfMany(loaded, qs, nprobe = 4, k = 5,
+        pred = col("label") % 2 === 0)
+      val byQuery = bulk.orderBy("q_id", "nn_rank")
+        .as[(Long, Long, Double, Int)].collect().toSeq.groupBy(_._1)
+      for (q <- 0L until 8L) {
+        val single = SimilarityOps.probeIvfFiltered(loaded,
+            SimilarityOps.vectorOf(spark, sf, q), col("label") % 2 === 0,
+            nprobe = 4, k = 5, excludeId = q)
+          .select("vec_id", "cos_sim")
+          .as[(Long, Double)].collect().toSeq
+        assert(byQuery.getOrElse(q, Seq.empty).sortBy(_._4)
+            .map(r => (r._2, r._3)) == single,
+          s"filtered bulk result for query $q diverged from probeIvfFiltered")
+      }
+      // every returned neighbor satisfies the predicate
+      val ids = bulk.select("vec_id").as[Long].collect().toSet
+      val evens = Tables.load(spark, sf, "embeddings")
+        .where(col("label") % 2 === 0)
+        .select("vec_id").as[Long].collect().toSet
+      assert(ids.subsetOf(evens), "a filtered-out row leaked into the top-k")
     }
-    // every returned neighbor satisfies the predicate
-    val ids = bulk.select("vec_id").as[Long].collect().toSet
-    val evens = Tables.load(spark, sf, "embeddings")
-      .where(col("label") % 2 === 0)
-      .select("vec_id").as[Long].collect().toSet
-    assert(ids.subsetOf(evens), "a filtered-out row leaked into the top-k")
   }
 
   test("knnClassify predicts the majority label of the bulk probe's " +
       "neighbors with the smallest-label tie-break") {
     import org.apache.spark.sql.functions.col
     val built = SimilarityOps.buildIvfIndex(spark, sf)
-    val path = java.nio.file.Files.createTempDirectory("ivf_knncls").toString
-    SimilarityOps.saveIvfIndex(built, path)
-    val loaded = SimilarityOps.loadIvfIndex(spark, path)
-    val emb = Tables.load(spark, sf, "embeddings")
-    val qs = emb.where(col("vec_id") < 8L)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val pred = SimilarityOps.knnClassify(loaded, qs, emb, nprobe = 4, k = 10)
-      .as[(Long, Int, Long)].collect().toSeq.sortBy(_._1)
-    assert(pred.map(_._1) == (0L until 8L).toSeq, "one prediction per query")
-    // recompute the vote by hand from the bulk probe + the label map
-    val labels = emb.select("vec_id", "label")
-      .as[(Long, Int)].collect().toMap
-    val nn = SimilarityOps.probeIvfMany(loaded, qs, nprobe = 4, k = 10)
-      .select("q_id", "vec_id").as[(Long, Long)].collect().toSeq
-    val expect = nn.groupBy(_._1).map { case (q, rows) =>
-      val votes = rows.map(r => labels(r._2))
-        .groupBy(identity).map { case (l, v) => (l, v.size.toLong) }
-      val (bestLabel, bestVotes) =
-        votes.toSeq.sortBy { case (l, n) => (-n, l) }.head
-      (q, bestLabel, bestVotes)
-    }.toSeq.sortBy(_._1)
-    assert(pred == expect, "knnClassify diverged from the hand vote")
+    withTempDir("ivf_knncls") { dir =>
+      val path = dir.toString
+      SimilarityOps.saveIvfIndex(built, path)
+      val loaded = SimilarityOps.loadIvfIndex(spark, path)
+      val emb = Tables.load(spark, sf, "embeddings")
+      val qs = emb.where(col("vec_id") < 8L)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+      val pred = SimilarityOps.knnClassify(loaded, qs, emb, nprobe = 4, k = 10)
+        .as[(Long, Int, Long)].collect().toSeq.sortBy(_._1)
+      assert(pred.map(_._1) == (0L until 8L).toSeq, "one prediction per query")
+      // recompute the vote by hand from the bulk probe + the label map
+      val labels = emb.select("vec_id", "label")
+        .as[(Long, Int)].collect().toMap
+      val nn = SimilarityOps.probeIvfMany(loaded, qs, nprobe = 4, k = 10)
+        .select("q_id", "vec_id").as[(Long, Long)].collect().toSeq
+      val expect = nn.groupBy(_._1).map { case (q, rows) =>
+        val votes = rows.map(r => labels(r._2))
+          .groupBy(identity).map { case (l, v) => (l, v.size.toLong) }
+        val (bestLabel, bestVotes) =
+          votes.toSeq.sortBy { case (l, n) => (-n, l) }.head
+        (q, bestLabel, bestVotes)
+      }.toSeq.sortBy(_._1)
+      assert(pred == expect, "knnClassify diverged from the hand vote")
+    }
   }
 
   test("bulk ADC probe equals the single-vector IVFADC probe per query, " +
       "with codegen pair scoring (no UDF in the pair loop)") {
     import org.apache.spark.sql.functions.col
     val built = SimilarityOps.buildIvfIndex(spark, sf)
-    val path = java.nio.file.Files.createTempDirectory("ivf_bulkpq").toString
-    SimilarityOps.saveIvfIndex(built, path)
-    val loaded = SimilarityOps.loadIvfIndex(spark, path)
-    val cb = SimilarityOps.pqCodebooksOf(Tables.load(spark, sf, "embeddings"))
-    val qs = Tables.load(spark, sf, "embeddings")
-      .where(col("vec_id") < 8L)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-    val bulk = SimilarityOps.probeIvfPqMany(loaded, cb, qs, nprobe = 4, k = 5)
-    val byQuery = bulk.orderBy("q_id", "nn_rank")
-      .as[(Long, Long, Long, Int)].collect().toSeq.groupBy(_._1)
-    assert(byQuery.keySet == (0L until 8L).toSet, "one group per query")
-    for (q <- 0L until 8L) {
-      val single = SimilarityOps.ivfPqProbe(loaded, cb,
-          SimilarityOps.vectorOf(spark, sf, q), nprobe = 4, k = 5,
-          excludeId = q)
-        .select("vec_id", "adc_micro")
-        .as[(Long, Long)].collect().toSeq
-      assert(byQuery(q).sortBy(_._4).map(r => (r._2, r._3)) == single,
-        s"bulk ADC result for query $q diverged from the single probe")
+    withTempDir("ivf_bulkpq") { dir =>
+      val path = dir.toString
+      SimilarityOps.saveIvfIndex(built, path)
+      val loaded = SimilarityOps.loadIvfIndex(spark, path)
+      val cb = SimilarityOps.pqCodebooksOf(Tables.load(spark, sf, "embeddings"))
+      val qs = Tables.load(spark, sf, "embeddings")
+        .where(col("vec_id") < 8L)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+      val bulk = SimilarityOps.probeIvfPqMany(loaded, cb, qs, nprobe = 4, k = 5)
+      val byQuery = bulk.orderBy("q_id", "nn_rank")
+        .as[(Long, Long, Long, Int)].collect().toSeq.groupBy(_._1)
+      assert(byQuery.keySet == (0L until 8L).toSet, "one group per query")
+      for (q <- 0L until 8L) {
+        val single = SimilarityOps.ivfPqProbe(loaded, cb,
+            SimilarityOps.vectorOf(spark, sf, q), nprobe = 4, k = 5,
+            excludeId = q)
+          .select("vec_id", "adc_micro")
+          .as[(Long, Long)].collect().toSeq
+        assert(byQuery(q).sortBy(_._4).map(r => (r._2, r._3)) == single,
+          s"bulk ADC result for query $q diverged from the single probe")
+      }
+      // the per-pair scorer must be the codegen element_at sum — the two
+      // UDFs (corpus encode, query table) evaluate per ROW, never per
+      // pair: the join's projection above the pruned scan carries no
+      // ScalaUDF whose inputs span both sides
+      val audit = graft.engine.PlanAudit.audit(bulk)
+      assert(audit.partitionPrunedScans >= 1,
+        s"bulk ADC probe must prune cell partitions: ${audit.render}")
+      val plan = bulk.queryExecution.executedPlan.toString
+      assert(plan.contains("Broadcast"), "query batch must broadcast")
+      assert(!plan.contains("CartesianProduct") &&
+        !plan.contains("BroadcastNestedLoop"),
+        s"bulk ADC probe degenerated to a product join:\n$plan")
     }
-    // the per-pair scorer must be the codegen element_at sum — the two
-    // UDFs (corpus encode, query table) evaluate per ROW, never per
-    // pair: the join's projection above the pruned scan carries no
-    // ScalaUDF whose inputs span both sides
-    val audit = graft.engine.PlanAudit.audit(bulk)
-    assert(audit.partitionPrunedScans >= 1,
-      s"bulk ADC probe must prune cell partitions: ${audit.render}")
-    val plan = bulk.queryExecution.executedPlan.toString
-    assert(plan.contains("Broadcast"), "query batch must broadcast")
-    assert(!plan.contains("CartesianProduct") &&
-      !plan.contains("BroadcastNestedLoop"),
-      s"bulk ADC probe degenerated to a product join:\n$plan")
   }
 
   test("probe-cell ranking: expression tree and broadcast-matrix UDF " +
@@ -248,51 +256,55 @@ class SimilaritySpec extends SparkSpec {
 
   test("persisted IVF index round-trips and probes with partition pruning") {
     val built = SimilarityOps.buildIvfIndex(spark, sf)
-    val path = java.nio.file.Files.createTempDirectory("ivf_rt").toString
-    SimilarityOps.saveIvfIndex(built, path)
-    val loaded = SimilarityOps.loadIvfIndex(spark, path)
-    assert(loaded.centroids == built.centroids,
-      "centroids must survive the parquet round-trip bit-exactly")
-    val q = SimilarityOps.vectorOf(spark, sf, 0L)
-    val fromDisk = SimilarityOps.probeIvf(loaded, q, nprobe = 4, k = 10,
-      excludeId = 0L)
-    val fromMem = SimilarityOps.probeIvf(built, q, nprobe = 4, k = 10,
-      excludeId = 0L)
-    assert(fromDisk.collect().toSeq == fromMem.collect().toSeq,
-      "the persisted index must answer exactly like the in-memory one")
-    // the scale property: the probe's scan carries partition filters on
-    // `cell`, so only the nprobe cell directories are read — at 100 TB
-    // a probe touches nprobe/nlist of the bytes regardless of corpus
-    // size
-    val audit = graft.engine.PlanAudit.audit(fromDisk)
-    assert(audit.partitionPrunedScans == 1,
-      s"probe must prune cell partitions: ${audit.render}")
+    withTempDir("ivf_rt") { dir =>
+      val path = dir.toString
+      SimilarityOps.saveIvfIndex(built, path)
+      val loaded = SimilarityOps.loadIvfIndex(spark, path)
+      assert(loaded.centroids == built.centroids,
+        "centroids must survive the parquet round-trip bit-exactly")
+      val q = SimilarityOps.vectorOf(spark, sf, 0L)
+      val fromDisk = SimilarityOps.probeIvf(loaded, q, nprobe = 4, k = 10,
+        excludeId = 0L)
+      val fromMem = SimilarityOps.probeIvf(built, q, nprobe = 4, k = 10,
+        excludeId = 0L)
+      assert(fromDisk.collect().toSeq == fromMem.collect().toSeq,
+        "the persisted index must answer exactly like the in-memory one")
+      // the scale property: the probe's scan carries partition filters on
+      // `cell`, so only the nprobe cell directories are read — at 100 TB
+      // a probe touches nprobe/nlist of the bytes regardless of corpus
+      // size
+      val audit = graft.engine.PlanAudit.audit(fromDisk)
+      assert(audit.partitionPrunedScans == 1,
+        s"probe must prune cell partitions: ${audit.render}")
+    }
   }
 
   test("filtered probe: predicate pushed into the pruned cell scan, " +
       "answers equal post-filtering the unfiltered member set") {
     val built = SimilarityOps.buildIvfIndex(spark, sf)
-    val path = java.nio.file.Files.createTempDirectory("ivf_flt").toString
-    SimilarityOps.saveIvfIndex(built, path)
-    val loaded = SimilarityOps.loadIvfIndex(spark, path)
-    val q = SimilarityOps.vectorOf(spark, sf, 0L)
-    val filtered = SimilarityOps.probeIvfFiltered(loaded, q,
-      org.apache.spark.sql.functions.col("label") % 2 === 0,
-      nprobe = 4, k = 10, excludeId = 0L)
-    // semantics: identical to taking the UNFILTERED probe at full
-    // depth over the same cells and keeping even labels
-    val wide = SimilarityOps.probeIvfFiltered(loaded, q,
-      org.apache.spark.sql.functions.lit(true),
-      nprobe = 4, k = 1 << 20, excludeId = 0L)
-      .collect().filter(_.getInt(1) % 2 == 0).take(10).toSeq
-    assert(filtered.collect().toSeq == wide)
-    // scale shape: ONE scan, cell-partition-pruned AND with the label
-    // predicate pushed to the parquet reader
-    val audit = graft.engine.PlanAudit.audit(filtered)
-    assert(audit.partitionPrunedScans == 1,
-      s"filtered probe must prune cell partitions: ${audit.render}")
-    assert(audit.scans.head.pushedFilters.exists(_.contains("label")),
-      s"label predicate not pushed to the scan: ${audit.render}")
+    withTempDir("ivf_flt") { dir =>
+      val path = dir.toString
+      SimilarityOps.saveIvfIndex(built, path)
+      val loaded = SimilarityOps.loadIvfIndex(spark, path)
+      val q = SimilarityOps.vectorOf(spark, sf, 0L)
+      val filtered = SimilarityOps.probeIvfFiltered(loaded, q,
+        org.apache.spark.sql.functions.col("label") % 2 === 0,
+        nprobe = 4, k = 10, excludeId = 0L)
+      // semantics: identical to taking the UNFILTERED probe at full
+      // depth over the same cells and keeping even labels
+      val wide = SimilarityOps.probeIvfFiltered(loaded, q,
+        org.apache.spark.sql.functions.lit(true),
+        nprobe = 4, k = 1 << 20, excludeId = 0L)
+        .collect().filter(_.getInt(1) % 2 == 0).take(10).toSeq
+      assert(filtered.collect().toSeq == wide)
+      // scale shape: ONE scan, cell-partition-pruned AND with the label
+      // predicate pushed to the parquet reader
+      val audit = graft.engine.PlanAudit.audit(filtered)
+      assert(audit.partitionPrunedScans == 1,
+        s"filtered probe must prune cell partitions: ${audit.render}")
+      assert(audit.scans.head.pushedFilters.exists(_.contains("label")),
+        s"label predicate not pushed to the scan: ${audit.render}")
+    }
   }
 
   test("incremental append to the persisted index equals one-shot assignment") {
@@ -302,30 +314,32 @@ class SimilaritySpec extends SparkSpec {
     val day2 = emb.where(col("vec_id") % 2L === 1L)
     // quantizer trained on day-1 only, then FROZEN — day-2 arrives later
     val centroids = SimilarityOps.kmeansCentroids(day1, 16, 2)
-    val path = java.nio.file.Files.createTempDirectory("ivf_incr").toString
-    val built = SimilarityOps.IvfIndex(centroids,
-      day1.withColumn("cell", SimilarityOps.cellExpr(centroids)))
-    SimilarityOps.saveIvfIndex(built, path)
-    SimilarityOps.appendToIvfIndex(spark, day2, path)
-    val incr = SimilarityOps.loadIvfIndex(spark, path)
-    assert(incr.centroids == centroids, "append must not touch the quantizer")
-    // the incrementally-built index must hold exactly the rows a
-    // one-shot assignment of the full corpus (same frozen quantizer)
-    // would produce
-    val oneShot = emb.withColumn("cell", SimilarityOps.cellExpr(centroids))
-      .select("vec_id", "cell")
-    val got = incr.assigned.select("vec_id", "cell")
-    assert(got.count() == emb.count())
-    assert(got.exceptAll(oneShot).isEmpty && oneShot.exceptAll(got).isEmpty,
-      "incremental day1+day2 must equal the one-shot assignment")
-    // and the probe answers identically
-    val q = SimilarityOps.vectorOf(spark, sf, 0L)
-    val a = SimilarityOps.probeIvf(incr, q, nprobe = 4, k = 10, excludeId = 0L)
-    val b = SimilarityOps.probeIvf(
-      SimilarityOps.IvfIndex(centroids,
-        emb.withColumn("cell", SimilarityOps.cellExpr(centroids))),
-      q, nprobe = 4, k = 10, excludeId = 0L)
-    assert(a.collect().toSeq == b.collect().toSeq)
+    withTempDir("ivf_incr") { dir =>
+      val path = dir.toString
+      val built = SimilarityOps.IvfIndex(centroids,
+        day1.withColumn("cell", SimilarityOps.cellExpr(centroids)))
+      SimilarityOps.saveIvfIndex(built, path)
+      SimilarityOps.appendToIvfIndex(spark, day2, path)
+      val incr = SimilarityOps.loadIvfIndex(spark, path)
+      assert(incr.centroids == centroids, "append must not touch the quantizer")
+      // the incrementally-built index must hold exactly the rows a
+      // one-shot assignment of the full corpus (same frozen quantizer)
+      // would produce
+      val oneShot = emb.withColumn("cell", SimilarityOps.cellExpr(centroids))
+        .select("vec_id", "cell")
+      val got = incr.assigned.select("vec_id", "cell")
+      assert(got.count() == emb.count())
+      assert(got.exceptAll(oneShot).isEmpty && oneShot.exceptAll(got).isEmpty,
+        "incremental day1+day2 must equal the one-shot assignment")
+      // and the probe answers identically
+      val q = SimilarityOps.vectorOf(spark, sf, 0L)
+      val a = SimilarityOps.probeIvf(incr, q, nprobe = 4, k = 10, excludeId = 0L)
+      val b = SimilarityOps.probeIvf(
+        SimilarityOps.IvfIndex(centroids,
+          emb.withColumn("cell", SimilarityOps.cellExpr(centroids))),
+        q, nprobe = 4, k = 10, excludeId = 0L)
+      assert(a.collect().toSeq == b.collect().toSeq)
+    }
   }
 
   test("broadcast-matrix scorer assigns identically to the expression tree") {
@@ -540,103 +554,107 @@ class SimilaritySpec extends SparkSpec {
       "probe partitions, and leaves the full-probe answer invariant") {
     val emb = Tables.load(spark, sf, "embeddings")
     val centroids = SimilarityOps.kmeansCentroids(emb, 16, 2)
-    val path = java.nio.file.Files.createTempDirectory("ivf_rebal").toString
-    SimilarityOps.saveIvfIndex(
-      SimilarityOps.IvfIndex(centroids,
-        emb.withColumn("cell", SimilarityOps.cellExpr(centroids))), path)
-    // skewed day-2 ingest: 120 NEAR-copies of vector 0 (tiny distinct
-    // per-id jitter on one dimension) — the frozen quantizer funnels
-    // them all into vector 0's cell, the drift rebalance must detect
-    val base = SimilarityOps.vectorOf(spark, sf, 0L).map(_.toFloat)
-    val skew = spark.range(10000L, 10120L)
-      .select(col("id").as("vec_id"),
-        transform(typedLit(base), (x, i) =>
-          x + when(i === pmod(col("id"), lit(64L)).cast("int"),
-            pmod(col("id"), lit(7L)).cast("float") * lit(0.001f))
-            .otherwise(lit(0.0f))).as("embedding"),
-        lit(0).as("label"))
-    SimilarityOps.appendToIvfIndex(spark, skew, path)
-    val sizesBefore = SimilarityOps.ivfCellSizes(spark, path)
-    val cap = 100
-    assert(sizesBefore.values.max > cap,
-      s"skew did not bloat a cell: $sizesBefore")
-    val membersBefore = spark.read.parquet(s"$path/assigned")
-      .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
-    val q = SimilarityOps.vectorOf(spark, sf, 5L)
-    def fullProbe() = SimilarityOps.probeIvf(
-      SimilarityOps.loadIvfIndex(spark, path), q,
-      nprobe = 10000, k = 10, excludeId = 5L).collect().toSeq
-    val answerBefore = fullProbe()
-    val split = SimilarityOps.rebalanceIvfIndex(spark, path, cap = cap)
-    assert(split >= 1, "rebalance found nothing to split")
-    val sizesAfter = SimilarityOps.ivfCellSizes(spark, path)
-    // physical improvement: the hot partition shrank and the layout
-    // gained cells; the oversized parent ids are gone
-    assert(sizesAfter.values.max < sizesBefore.values.max,
-      s"hot cell not reduced: $sizesBefore -> $sizesAfter")
-    assert(sizesAfter.size > sizesBefore.size)
-    sizesBefore.filter(_._2 > cap).keys.foreach(c =>
-      assert(!sizesAfter.contains(c), s"parent cell $c still present"))
-    // logical invariance: same member set (through the manifest — the
-    // raw dir legitimately keeps ONE graced superseded generation for
-    // lock-free readers), and a probe over ALL cells returns the
-    // identical top-k — rebalance is layout-only
-    val membersAfter = SimilarityOps.ivfAssignedFrame(spark, path)
-      .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(membersAfter == membersBefore, "rebalance changed membership")
-    assert(fullProbe() == answerBefore, "rebalance changed the answer")
-    // the graced parent dirs ARE still on disk right after the commit
-    // (the concurrent-reader grace window)…
-    def rawCellDirs(): Set[Int] = {
-      val onDisk = java.nio.file.Files.list(
-        java.nio.file.Paths.get(path, "assigned"))
-      try {
-        import scala.jdk.CollectionConverters._
-        onDisk.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith("cell=")).map(_.stripPrefix("cell=").toInt)
-          .toSet
-      } finally onDisk.close()
+    withTempDir("ivf_rebal") { dir =>
+      val path = dir.toString
+      SimilarityOps.saveIvfIndex(
+        SimilarityOps.IvfIndex(centroids,
+          emb.withColumn("cell", SimilarityOps.cellExpr(centroids))), path)
+      // skewed day-2 ingest: 120 NEAR-copies of vector 0 (tiny distinct
+      // per-id jitter on one dimension) — the frozen quantizer funnels
+      // them all into vector 0's cell, the drift rebalance must detect
+      val base = SimilarityOps.vectorOf(spark, sf, 0L).map(_.toFloat)
+      val skew = spark.range(10000L, 10120L)
+        .select(col("id").as("vec_id"),
+          transform(typedLit(base), (x, i) =>
+            x + when(i === pmod(col("id"), lit(64L)).cast("int"),
+              pmod(col("id"), lit(7L)).cast("float") * lit(0.001f))
+              .otherwise(lit(0.0f))).as("embedding"),
+          lit(0).as("label"))
+      SimilarityOps.appendToIvfIndex(spark, skew, path)
+      val sizesBefore = SimilarityOps.ivfCellSizes(spark, path)
+      val cap = 100
+      assert(sizesBefore.values.max > cap,
+        s"skew did not bloat a cell: $sizesBefore")
+      val membersBefore = spark.read.parquet(s"$path/assigned")
+        .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
+      val q = SimilarityOps.vectorOf(spark, sf, 5L)
+      def fullProbe() = SimilarityOps.probeIvf(
+        SimilarityOps.loadIvfIndex(spark, path), q,
+        nprobe = 10000, k = 10, excludeId = 5L).collect().toSeq
+      val answerBefore = fullProbe()
+      val split = SimilarityOps.rebalanceIvfIndex(spark, path, cap = cap)
+      assert(split >= 1, "rebalance found nothing to split")
+      val sizesAfter = SimilarityOps.ivfCellSizes(spark, path)
+      // physical improvement: the hot partition shrank and the layout
+      // gained cells; the oversized parent ids are gone
+      assert(sizesAfter.values.max < sizesBefore.values.max,
+        s"hot cell not reduced: $sizesBefore -> $sizesAfter")
+      assert(sizesAfter.size > sizesBefore.size)
+      sizesBefore.filter(_._2 > cap).keys.foreach(c =>
+        assert(!sizesAfter.contains(c), s"parent cell $c still present"))
+      // logical invariance: same member set (through the manifest — the
+      // raw dir legitimately keeps ONE graced superseded generation for
+      // lock-free readers), and a probe over ALL cells returns the
+      // identical top-k — rebalance is layout-only
+      val membersAfter = SimilarityOps.ivfAssignedFrame(spark, path)
+        .select("vec_id").collect().map(_.getLong(0)).sorted.toSeq
+      assert(membersAfter == membersBefore, "rebalance changed membership")
+      assert(fullProbe() == answerBefore, "rebalance changed the answer")
+      // the graced parent dirs ARE still on disk right after the commit
+      // (the concurrent-reader grace window)…
+      def rawCellDirs(): Set[Int] = {
+        val onDisk = java.nio.file.Files.list(
+          java.nio.file.Paths.get(path, "assigned"))
+        try {
+          import scala.jdk.CollectionConverters._
+          onDisk.iterator().asScala.map(_.getFileName.toString)
+            .filter(_.startsWith("cell=")).map(_.stripPrefix("cell=").toInt)
+            .toSet
+        } finally onDisk.close()
+      }
+      val parents = sizesBefore.filter(_._2 > cap).keySet
+      assert(parents.subsetOf(rawCellDirs()),
+        "graced parent dirs deleted immediately — no reader grace window")
+      // centroid list stays consistent with the layout: one centroid per
+      // cell dir, labels unique (centroids resolve through the manifest
+      // after a rebalance — the committed dir, not the stale boot dir)
+      val cents = SimilarityOps.loadIvfIndex(spark, path)
+        .centroids.map(_._1)
+      assert(cents.distinct.length == cents.length)
+      assert(cents.toSet == sizesAfter.keySet)
+      // …and rebalance entries collect superseded generations: drain the
+      // split schedule (a child can itself still be over cap) — the final
+      // 0-split entry's GC leaves disk exactly equal to the live layout
+      while (SimilarityOps.rebalanceIvfIndex(spark, path, cap = cap) > 0) {}
+      assert(rawCellDirs() == SimilarityOps.ivfCellSizes(spark, path).keySet,
+        "graced generation not collected at the next rebalance entry")
+      assert(fullProbe() == answerBefore, "drained rebalances changed the answer")
     }
-    val parents = sizesBefore.filter(_._2 > cap).keySet
-    assert(parents.subsetOf(rawCellDirs()),
-      "graced parent dirs deleted immediately — no reader grace window")
-    // centroid list stays consistent with the layout: one centroid per
-    // cell dir, labels unique (centroids resolve through the manifest
-    // after a rebalance — the committed dir, not the stale boot dir)
-    val cents = SimilarityOps.loadIvfIndex(spark, path)
-      .centroids.map(_._1)
-    assert(cents.distinct.length == cents.length)
-    assert(cents.toSet == sizesAfter.keySet)
-    // …and rebalance entries collect superseded generations: drain the
-    // split schedule (a child can itself still be over cap) — the final
-    // 0-split entry's GC leaves disk exactly equal to the live layout
-    while (SimilarityOps.rebalanceIvfIndex(spark, path, cap = cap) > 0) {}
-    assert(rawCellDirs() == SimilarityOps.ivfCellSizes(spark, path).keySet,
-      "graced generation not collected at the next rebalance entry")
-    assert(fullProbe() == answerBefore, "drained rebalances changed the answer")
   }
 
   /** Fabricate a skew-bloated index root exactly like the rebalance
     * test above: saved plain layout + 120 near-copies of vector 0
-    * appended into one cell.
+    * appended into one cell. `body` runs on it; the root is deleted after.
     */
-  private def skewedIndexRoot(): String = {
+  private def withSkewedIndex[A](body: String => A): A = {
     val emb = Tables.load(spark, sf, "embeddings")
     val centroids = SimilarityOps.kmeansCentroids(emb, 16, 2)
-    val path = java.nio.file.Files.createTempDirectory("ivf_kill").toString
-    SimilarityOps.saveIvfIndex(
-      SimilarityOps.IvfIndex(centroids,
-        emb.withColumn("cell", SimilarityOps.cellExpr(centroids))), path)
-    val base = SimilarityOps.vectorOf(spark, sf, 0L).map(_.toFloat)
-    val skew = spark.range(10000L, 10120L)
-      .select(col("id").as("vec_id"),
-        transform(typedLit(base), (x, i) =>
-          x + when(i === pmod(col("id"), lit(64L)).cast("int"),
-            pmod(col("id"), lit(7L)).cast("float") * lit(0.001f))
-            .otherwise(lit(0.0f))).as("embedding"),
-        lit(0).as("label"))
-    SimilarityOps.appendToIvfIndex(spark, skew, path)
-    path
+    withTempDir("ivf_kill") { dir =>
+      val path = dir.toString
+      SimilarityOps.saveIvfIndex(
+        SimilarityOps.IvfIndex(centroids,
+          emb.withColumn("cell", SimilarityOps.cellExpr(centroids))), path)
+      val base = SimilarityOps.vectorOf(spark, sf, 0L).map(_.toFloat)
+      val skew = spark.range(10000L, 10120L)
+        .select(col("id").as("vec_id"),
+          transform(typedLit(base), (x, i) =>
+            x + when(i === pmod(col("id"), lit(64L)).cast("int"),
+              pmod(col("id"), lit(7L)).cast("float") * lit(0.001f))
+              .otherwise(lit(0.0f))).as("embedding"),
+          lit(0).as("label"))
+      SimilarityOps.appendToIvfIndex(spark, skew, path)
+      body(path)
+    }
   }
 
   test("kill-mid-rebalance at every window: readers never see a " +
@@ -649,52 +667,54 @@ class SimilaritySpec extends SparkSpec {
     // (a child of the first split is itself still over cap, so the
     // next scheduled rebalance legitimately splits again; window 3's
     // retry lands on pass-2 state, windows 1-2's on pass-1 state)
-    val ref = skewedIndexRoot()
-    val refMembers = members(ref)
-    assert(SimilarityOps.rebalanceIvfIndex(spark, ref, cap = 100) >= 1)
-    val refPass1 = (members(ref), SimilarityOps.ivfCellSizes(spark, ref))
-    SimilarityOps.rebalanceIvfIndex(spark, ref, cap = 100)
-    val refPass2 = (members(ref), SimilarityOps.ivfCellSizes(spark, ref))
-    for (window <- Seq(1, 2, 3)) {
-      val refAfter = if (window == 3) refPass2 else refPass1
-      val path = skewedIndexRoot()
-      SimilarityOps.rebalanceKillAt = Some(window)
-      try intercept[IllegalStateException] {
-        SimilarityOps.rebalanceIvfIndex(spark, path, cap = 100)
-      } finally SimilarityOps.rebalanceKillAt = None
-      // crash state: every reader (load, census, membership) resolves
-      // through the manifest — NO duplicated members (windows 1-2
-      // leave children on disk uncommitted; window 3 leaves parents
-      // undropped), NO lost members
-      assert(members(path) == refMembers,
-        s"window $window: torn state visible to readers")
-      val sizes = SimilarityOps.ivfCellSizes(spark, path)
-      assert(sizes.values.sum == refMembers.size,
-        s"window $window: census double-counts")
-      // the retry completes: same member set and cell census as the
-      // never-crashed run (window 3 committed already, so its retry
-      // is a no-op GC pass — rebalance returns 0 splits but the
-      // LAYOUT must already equal the reference)
-      SimilarityOps.rebalanceIvfIndex(spark, path, cap = 100)
-      assert(members(path) == refAfter._1,
-        s"window $window: retry lost or duplicated members")
-      assert(SimilarityOps.ivfCellSizes(spark, path) == refAfter._2,
-        s"window $window: retry census differs from never-crashed run")
-      // debris discipline: a splitting pass legitimately leaves ONE
-      // graced superseded generation (the concurrent-reader window);
-      // draining the schedule to a 0-split entry collects everything
-      while (SimilarityOps.rebalanceIvfIndex(spark, path, cap = 100) > 0) {}
-      val onDisk = java.nio.file.Files.list(
-        java.nio.file.Paths.get(path, "assigned"))
-      val cellDirs =
-        try {
-          import scala.jdk.CollectionConverters._
-          onDisk.iterator().asScala.map(_.getFileName.toString)
-            .filter(_.startsWith("cell=")).map(_.stripPrefix("cell=").toInt)
-            .toSet
-        } finally onDisk.close()
-      assert(cellDirs == SimilarityOps.ivfCellSizes(spark, path).keySet,
-        s"window $window: orphan cell dirs remain")
+    withSkewedIndex { ref =>
+      val refMembers = members(ref)
+      assert(SimilarityOps.rebalanceIvfIndex(spark, ref, cap = 100) >= 1)
+      val refPass1 = (members(ref), SimilarityOps.ivfCellSizes(spark, ref))
+      SimilarityOps.rebalanceIvfIndex(spark, ref, cap = 100)
+      val refPass2 = (members(ref), SimilarityOps.ivfCellSizes(spark, ref))
+      for (window <- Seq(1, 2, 3)) {
+        val refAfter = if (window == 3) refPass2 else refPass1
+        withSkewedIndex { path =>
+          SimilarityOps.rebalanceKillAt = Some(window)
+          try intercept[IllegalStateException] {
+            SimilarityOps.rebalanceIvfIndex(spark, path, cap = 100)
+          } finally SimilarityOps.rebalanceKillAt = None
+          // crash state: every reader (load, census, membership) resolves
+          // through the manifest — NO duplicated members (windows 1-2
+          // leave children on disk uncommitted; window 3 leaves parents
+          // undropped), NO lost members
+          assert(members(path) == refMembers,
+            s"window $window: torn state visible to readers")
+          val sizes = SimilarityOps.ivfCellSizes(spark, path)
+          assert(sizes.values.sum == refMembers.size,
+            s"window $window: census double-counts")
+          // the retry completes: same member set and cell census as the
+          // never-crashed run (window 3 committed already, so its retry
+          // is a no-op GC pass — rebalance returns 0 splits but the
+          // LAYOUT must already equal the reference)
+          SimilarityOps.rebalanceIvfIndex(spark, path, cap = 100)
+          assert(members(path) == refAfter._1,
+            s"window $window: retry lost or duplicated members")
+          assert(SimilarityOps.ivfCellSizes(spark, path) == refAfter._2,
+            s"window $window: retry census differs from never-crashed run")
+          // debris discipline: a splitting pass legitimately leaves ONE
+          // graced superseded generation (the concurrent-reader window);
+          // draining the schedule to a 0-split entry collects everything
+          while (SimilarityOps.rebalanceIvfIndex(spark, path, cap = 100) > 0) {}
+          val onDisk = java.nio.file.Files.list(
+            java.nio.file.Paths.get(path, "assigned"))
+          val cellDirs =
+            try {
+              import scala.jdk.CollectionConverters._
+              onDisk.iterator().asScala.map(_.getFileName.toString)
+                .filter(_.startsWith("cell=")).map(_.stripPrefix("cell=").toInt)
+                .toSet
+            } finally onDisk.close()
+          assert(cellDirs == SimilarityOps.ivfCellSizes(spark, path).keySet,
+            s"window $window: orphan cell dirs remain")
+        }
+      }
     }
   }
 }

@@ -1,9 +1,7 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.CountDownLatch
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.types.TimestampType
 
@@ -17,36 +15,6 @@ import graft.engine.{CacheRegistry, SqlTemplates}
 class TablesSpec extends SparkSpec {
 
   private val sf01 = "/root/testdata/sf0.01"
-
-  /** Spark jobs `body` submits from this thread (and threads it starts).
-    * Jobs are tagged with a local property, and a tagged sentinel job
-    * run last marks the point where the listener has seen every one.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"tables-spec-${System.nanoTime()}"
-    val jobs = new AtomicInteger()
-    val seenAll = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("graft.spec.tag")) match {
-          case Some(t) if t == tag + "-end" => seenAll.countDown()
-          case Some(t) if t == tag => jobs.incrementAndGet()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("graft.spec.tag", tag)
-      try body finally sc.setLocalProperty("graft.spec.tag", tag + "-end")
-      sc.parallelize(Seq(1), 1).count()
-      assert(seenAll.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
-      jobs.get()
-    } finally {
-      sc.setLocalProperty("graft.spec.tag", null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   private def plain(dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
@@ -100,8 +68,8 @@ class TablesSpec extends SparkSpec {
   }
 
   test("a missing table raises the same error as a plain read") {
-    val empty = java.nio.file.Files.createTempDirectory("graft_tables_spec").toString
-    try {
+    withTempDir("graft_tables_spec") { dir =>
+      val empty = dir.toString
       val want = intercept[AnalysisException](plain(empty, "customer")).getMessage
       val got = intercept[AnalysisException](Tables.load(spark, empty, "customer"))
       assert(got.getMessage == want)
@@ -109,7 +77,7 @@ class TablesSpec extends SparkSpec {
       intercept[AnalysisException](Tables.load(spark, empty, "customer"))
       val unknown = intercept[IllegalArgumentException](Tables.load(spark, sf, "nope"))
       assert(unknown.getMessage == "requirement failed: unknown table: nope")
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(empty))
+    }
   }
 
   test("a SQL text names a table as a case-insensitive whole word") {

@@ -28,45 +28,47 @@ class UpsertStreamSpec extends SparkSpec {
     // batch 1: (key 7, seq 1, 10.0), (key 9, seq 5, 50.0)
     // batch 2: (key 7, seq 3, 30.0) — newer seq, must override —
     //          and (key 9, seq 2, 20.0) — older seq, must NOT override
-    val dir = java.nio.file.Files.createTempDirectory("graft_upsert")
-    def ship(tag: String, rows: Seq[(Long, Long, Double)]): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_upsert_w")
-      rows.toDF("o_custkey", "o_orderkey", "o_totalprice")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = java.nio.file.Files.list(tmp).iterator()
-      var moved = false
-      while (part.hasNext && !moved) {
-        val p = part.next()
-        if (p.toString.endsWith(".parquet")) {
-          java.nio.file.Files.move(p, dir.resolve(s"$tag.parquet"))
-          moved = true
+    withTempDir("graft_upsert") { dir =>
+      def ship(tag: String, rows: Seq[(Long, Long, Double)]): Unit = {
+        withTempDir("graft_upsert_w") { tmp =>
+          rows.toDF("o_custkey", "o_orderkey", "o_totalprice")
+            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+          val part = java.nio.file.Files.list(tmp).iterator()
+          var moved = false
+          while (part.hasNext && !moved) {
+            val p = part.next()
+            if (p.toString.endsWith(".parquet")) {
+              java.nio.file.Files.move(p, dir.resolve(s"$tag.parquet"))
+              moved = true
+            }
+          }
+          assert(moved, "no parquet part written")
         }
       }
-      assert(moved, "no parquet part written")
+      ship("b1", Seq((7L, 1L, 10.0), (9L, 5L, 50.0)))
+      ship("b2", Seq((7L, 3L, 30.0), (9L, 2L, 20.0)))
+      val schema = Seq((0L, 0L, 0.0))
+        .toDF("o_custkey", "o_orderkey", "o_totalprice").schema
+      val compacted = StreamingOps.compactUpserts(spark.readStream
+        .schema(schema).format("parquet")
+        .option("maxFilesPerTrigger", "1")
+        .load(dir.toString)
+        .as[(Long, Long, Double)])
+      val q = compacted.writeStream.outputMode("update").format("memory")
+        .queryName("graft_upsert_mb").start()
+      try q.processAllAvailable() finally q.stop()
+      // update-mode memory sink appends one row per (key, batch) — the
+      // final state per key is the row with the highest fold count
+      val last = spark.table("graft_upsert_mb")
+        .groupBy(col("o_custkey"))
+        .agg(max(struct(col("n_upserts"), col("last_orderkey"),
+          col("last_price"))).as("m"))
+        .select(col("o_custkey"), col("m.last_orderkey"),
+          col("m.last_price"), col("m.n_upserts"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
+          r.getLong(3))).toSet
+      // both keys saw 2 upserts; key 7 keeps seq 3, key 9 keeps seq 5
+      assert(last === Set((7L, 3L, 30.0, 2L), (9L, 5L, 50.0, 2L)))
     }
-    ship("b1", Seq((7L, 1L, 10.0), (9L, 5L, 50.0)))
-    ship("b2", Seq((7L, 3L, 30.0), (9L, 2L, 20.0)))
-    val schema = Seq((0L, 0L, 0.0))
-      .toDF("o_custkey", "o_orderkey", "o_totalprice").schema
-    val compacted = StreamingOps.compactUpserts(spark.readStream
-      .schema(schema).format("parquet")
-      .option("maxFilesPerTrigger", "1")
-      .load(dir.toString)
-      .as[(Long, Long, Double)])
-    val q = compacted.writeStream.outputMode("update").format("memory")
-      .queryName("graft_upsert_mb").start()
-    try q.processAllAvailable() finally q.stop()
-    // update-mode memory sink appends one row per (key, batch) — the
-    // final state per key is the row with the highest fold count
-    val last = spark.table("graft_upsert_mb")
-      .groupBy(col("o_custkey"))
-      .agg(max(struct(col("n_upserts"), col("last_orderkey"),
-        col("last_price"))).as("m"))
-      .select(col("o_custkey"), col("m.last_orderkey"),
-        col("m.last_price"), col("m.n_upserts"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
-        r.getLong(3))).toSet
-    // both keys saw 2 upserts; key 7 keeps seq 3, key 9 keeps seq 5
-    assert(last === Set((7L, 3L, 30.0, 2L), (9L, 5L, 50.0, 2L)))
   }
 }
